@@ -2,8 +2,16 @@
 
 Vanilla Spark SQL cannot mutate parquet-backed views, so
 ``Engine.sql("DELETE FROM t WHERE ...")`` would fail at the analyzer.
-This shim recognizes the three DML statement shapes and routes them
-through the engine's real mutation paths:
+This module routes the statements below through the engine's real
+mutation paths.  :func:`parse_statement` parses each statement once
+with Spark's own parser (:mod:`polars_lake_spark.sqltree`): DELETE and
+UPDATE route by plan node, their WHERE/SET texts cut from node origins,
+and time travel by ``RelationTimeTravel`` nodes, so every literal reads
+exactly as Spark reads it.  The rest still route by prefix regex: Spark
+has no grammar for APPLY CHANGES, CONVERT TO VERSIONED, COPY INTO,
+OPTIMIZE, VACUUM, RESTORE and REORG (and parses DESCRIBE HISTORY as a
+column DESCRIBE), and the engine's MERGE, INSERT, CTAS and DDL forms add
+clauses Spark's plans do not carry.
 
 * ``DELETE FROM t [WHERE p]``            → row-exact rewrite of the kept
   slice (NOT key-based ``engine.delete`` — with non-unique keys a key
@@ -89,10 +97,12 @@ through the engine's real mutation paths:
   → ``engine.restore`` (timestamps resolve like time travel: the latest
   snapshot at or before the instant)
 * time travel: any ``t [FOR] VERSION AS OF n`` / ``t [FOR] TIMESTAMP AS
-  OF 'ts'`` reference to a VERSIONED engine table — in a bare SELECT or
-  inside any DML's source subquery — is rewritten to a version-pinned
-  temp view (``engine.table(name, version=...)``); TIMESTAMP resolves to
-  the latest snapshot at or before the instant (Delta semantics)
+  OF 'ts'`` reference to a VERSIONED engine table — in a bare SELECT, a
+  join, a subquery or CTE, or a DML source — is spliced to a
+  version-pinned temp view (``engine.table(name, version=...)``);
+  TIMESTAMP resolves to the latest snapshot at or before the instant
+  (Delta semantics); CTAS bodies and APPLY CHANGES sources get the same
+  through ``Engine.sql``
 
 Each returns a one-row ``(operation, table, n_affected)`` status frame;
 versioned tables get one atomic 'rewrite'/'append' snapshot per
@@ -117,17 +127,10 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from polars_lake_spark import sqltree
 from polars_lake_spark.exprs import referenced_columns, substitute_columns
 from polars_lake_spark.layout import BUCKET_COL as _BUCKET_COL
 
-_DELETE = re.compile(
-    r"^\s*DELETE\s+FROM\s+([A-Za-z_][\w.]*)(?:\s+WHERE\s+(.+?))?\s*;?\s*$",
-    re.I | re.S,
-)
-_UPDATE = re.compile(
-    r"^\s*UPDATE\s+([A-Za-z_][\w.]*)\s+SET\s+(.+?)\s*;?\s*$",
-    re.I | re.S,
-)
 _CTAS = re.compile(
     r"^\s*CREATE\s+(OR\s+REPLACE\s+)?(VERSIONED\s+)?TABLE\s+([A-Za-z_][\w.]*)"
     r"(?:\s+PARTITIONED\s+BY\s*\(([^)]*)\))?"
@@ -300,18 +303,20 @@ _RESTORE = re.compile(
     r"|TIMESTAMP\s+AS\s+OF\s+'([^']*)')\s*;?\s*$",
     re.I,
 )
-_TIMETRAVEL = re.compile(
-    r"\b([A-Za-z_][\w.]*)\s+(?:FOR\s+)?(VERSION|TIMESTAMP)\s+AS\s+OF\s+"
-    r"(\d+|'[^']*')",
-    re.I,
+# First keywords of the statements routed by regex alone: Spark's parser
+# has no grammar for them, or (DESCRIBE HISTORY t) misreads them as its
+# own statement, so their parse tree would route nothing.
+_UNPARSED = frozenset(
+    "APPLY CONVERT COPY OPTIMIZE VACUUM RESTORE REORG DESC DESCRIBE SHOW"
+    .split()
 )
 
 
 def _scan_top_level(s: str):
     """Yield (index, char) for every character, tagging only TOP-LEVEL
-    positions (outside quotes/parens/brackets).  ONE scanner for both
-    splitters so quote semantics can't drift between them; handles
-    backslash-escaped quotes (Spark SQL's default string escape)."""
+    positions (outside quotes/parens/brackets), for MERGE's clause
+    splitting; handles backslash-escaped quotes (Spark SQL's default
+    string escape)."""
     depth, q, i, n = 0, None, 0, len(s)
     while i < n:
         ch = s[i]
@@ -342,30 +347,6 @@ def _split_top_level(s: str) -> list[str]:
         prev = c + 1
     parts.append(s[prev:])
     return [p.strip() for p in parts if p.strip()]
-
-
-def _split_where(s: str) -> tuple[str, str | None]:
-    """Split "set-clauses [WHERE pred]" at the first TOP-LEVEL WHERE
-    keyword — a string literal containing 'where' can't truncate the
-    clause.  The keyword test slices ``s`` directly (no whole-string
-    lower(), whose length can drift from the original for exotic
-    casefolds). A trailing bare WHERE is an error, not an
-    update-everything."""
-    for i, ch in _scan_top_level(s):
-        if (
-            ch in "wW"
-            and s[i : i + 5].lower() == "where"
-            and (i == 0 or not (s[i - 1].isalnum() or s[i - 1] == "_"))
-            and (
-                i + 5 >= len(s)
-                or not (s[i + 5].isalnum() or s[i + 5] == "_")
-            )
-        ):
-            where = s[i + 5 :].strip()
-            if not where:
-                raise ValueError("empty WHERE clause in UPDATE statement")
-            return s[:i].strip(), where
-    return s.strip(), None
 
 
 def _resolve(engine, name: str) -> str | None:
@@ -402,81 +383,57 @@ def _version_at_timestamp(engine, name: str, ts: str) -> int:
     return max(eligible)
 
 
-def _quoted_spans(s: str) -> list[tuple[int, int]]:
-    """(start, end) index ranges of string literals in ``s`` (same quote
-    semantics as _scan_top_level: both quote kinds, backslash escapes;
-    an unterminated literal runs to end-of-string)."""
-    spans, q, start, i, n = [], None, 0, 0, len(s)
-    while i < n:
-        ch = s[i]
-        if q:
-            if ch == "\\":
-                i += 2
-                continue
-            if ch == q:
-                spans.append((start, i))
-                q = None
-        elif ch in "'\"":
-            q, start = ch, i
-        i += 1
-    if q:
-        spans.append((start, n))
-    return spans
+def parse_statement(engine, query: str) -> tuple[str, object, dict]:
+    """``(text, plan, asof)``: ``plan`` is Spark's parse tree of
+    ``text`` (None for regex-routed engine statements and anything Spark
+    rejects), with every time-travel reference to a versioned engine
+    table spliced to a pinned view — ``asof`` maps view -> (table,
+    version).  Only a splice costs a second parse."""
+    words = query.split(None, 1)
+    if not words or words[0].upper() in _UNPARSED:
+        return query, None, {}
+    plan = sqltree.parse_plan(engine.spark, query)
+    if plan is None:
+        return query, None, {}
+    text, asof = _splice_time_travel(engine, query, plan)
+    if asof:
+        plan = sqltree.parse_plan(engine.spark, text)
+    return text, plan, asof
 
 
-def _rewrite_time_travel(engine, query: str) -> tuple[str, dict]:
-    """Rewrite every ``t [FOR] VERSION|TIMESTAMP AS OF x`` reference to a
-    versioned engine table into a version-pinned temp view, so the AS OF
-    syntax works anywhere a table reference can appear (bare SELECTs,
-    INSERT/MERGE sources, CTAS bodies). References to unknown or
-    unversioned tables are left untouched for spark.sql to reject, and
-    matches INSIDE string literals are never rewritten (the literal's
-    contents are data, not syntax — r6 review finding).  Returns the
-    rewritten text plus ``{view_name: (table, version)}`` so the
-    zone-map SELECT fast-path can prune against the PINNED version's
-    sidecars (empty dict = nothing rewritten)."""
+def _splice_time_travel(engine, query: str, plan) -> tuple[str, dict]:
+    """Splice a version-pinned temp view over every ``t [FOR]
+    VERSION|TIMESTAMP AS OF x`` (``RelationTimeTravel``) of a versioned
+    engine table, anywhere in the plan.  The node's origin covers only
+    the AS OF clause, so the cut runs from its relation's start.  Other
+    references stay for spark.sql to reject.  Returns the new text and
+    ``{view: (table, version)}`` (the zone-map path prunes the pinned
+    version's files)."""
     views: dict[str, tuple[str, int]] = {}
-    spans = _quoted_spans(query)
-
-    def repl(m):
-        if any(a <= m.start() <= b for a, b in spans):
-            return m.group(0)
-        name = _resolve(engine, m.group(1))
+    cuts = []
+    for node in sqltree.plans(plan):
+        if sqltree.kind(node) != "RelationTimeTravel":
+            continue
+        rel = node.relation()
+        if sqltree.kind(rel) != "UnresolvedRelation":
+            continue
+        name = _resolve(engine, sqltree.name(rel))
         if name is None or not engine.specs[name].versioned:
-            return m.group(0)
-        if m.group(2).upper() == "VERSION":
-            version = int(m.group(3))
+            continue
+        if node.version().isDefined():
+            version = int(node.version().get())
         else:
-            version = _version_at_timestamp(engine, name, m.group(3).strip("'"))
+            ok, ts = sqltree.literal(node.timestamp().get())
+            if not ok:
+                continue
+            version = _version_at_timestamp(engine, name, str(ts))
         view = f"{name.replace('.', '__')}__asof_v{version}"
         engine.table(name, version=version).createOrReplaceTempView(view)
         views[view] = (name, version)
-        return view
-
-    return _TIMETRAVEL.sub(repl, query), views
-
-
-_PRED_KEYWORDS = frozenset(
-    "and or not in is null true false between like".split()
-)
-
-
-def _partition_only_predicate(pred: str, parts: list[str]) -> bool:
-    """True when every identifier in ``pred`` is a partition column (or
-    a boolean-predicate keyword) — i.e. the delete is partition-aligned
-    and a partition tombstone beats a deletion-vector sidecar. String
-    literals are masked first; any unrecognized identifier (an ordinary
-    column, a function call) conservatively returns False, keeping the
-    row-level path."""
-    if not parts:
-        return False
-    masked = list(pred)
-    for a, b in _quoted_spans(pred):
-        for i in range(a, min(b + 1, len(pred))):
-            masked[i] = " "
-    idents = re.findall(r"[A-Za-z_]\w*", "".join(masked))
-    allowed = _PRED_KEYWORDS | {p.lower() for p in parts}
-    return all(i.lower() in allowed for i in idents)
+        cuts.append((sqltree.span(rel)[0], sqltree.span(node)[1], view))
+    for a, b, view in sorted(cuts, reverse=True):
+        query = query[:a] + view + query[b + 1 :]
+    return query, views
 
 
 def _plan_deterministic(df: DataFrame) -> bool:
@@ -665,18 +622,34 @@ def _insert_frame(
     return df.localCheckpoint(eager=True)
 
 
-def try_execute_dml(engine, query: str) -> DataFrame | None:
-    """Execute ``query`` if it is a DML statement over a known engine
-    table; return the status frame, or None for everything else."""
-    # Time-travel references resolve FIRST so they work both in bare
-    # SELECTs and inside DML source subqueries.
-    query, tt = _rewrite_time_travel(engine, query)
+def _target(engine, plan) -> str | None:
+    """The engine table a DELETE/UPDATE plan targets; None for anything
+    else (an aliased or non-engine target runs vanilla)."""
+    rel = plan.table()
+    if sqltree.kind(rel) != "UnresolvedRelation":
+        return None
+    return _resolve(engine, sqltree.name(rel))
 
-    m = _DELETE.match(query)
-    if m:
-        name = _resolve(engine, m.group(1))
+
+def try_execute_dml(engine, query: str, plan) -> DataFrame | None:
+    """Execute ``query`` if it is a DML, DDL or engine statement over a
+    known engine table; return the status frame, or None for everything
+    else.  ``plan`` is its parse tree from :func:`parse_statement` (None
+    when Spark's parser has no grammar for it): DELETE and UPDATE route
+    by plan node, every other statement by regex."""
+    kind = sqltree.kind(plan) if plan is not None else None
+    if kind == "DeleteFromTable":
+        name = _target(engine, plan)
         if name is None:
             return None
+        # DELETE without WHERE parses to a TRUE condition: the same
+        # whole-table delete as WHERE true
+        cond = plan.condition()
+        where = (
+            None
+            if sqltree.literal(cond) == (True, True)
+            else sqltree.text(query, cond)
+        )
         if engine.specs[name].deletion_vectors:
             # Only genuinely ROW-level predicates pay the sidecar: a
             # DELETE with no predicate — or one touching only partition
@@ -687,7 +660,7 @@ def try_execute_dml(engine, query: str) -> DataFrame | None:
             # partition-only predicates fall through to the tombstone
             # path below (its commit carries live DVs forward — refs in
             # UNtouched partitions must survive).
-            if not m.group(2):
+            if where is None:
                 with engine._lock(name):
                     t = engine.table(name)
                     # live count from footers minus live DV refs — no
@@ -699,12 +672,15 @@ def try_execute_dml(engine, query: str) -> DataFrame | None:
                     if n:
                         engine.overwrite(name, t.limit(0), allow_drop=False)
                 return _status(engine, "delete", name, n)
-            if not _partition_only_predicate(
-                m.group(2), engine.specs[name].physical_partitioning
+            # a plain predicate on partition columns only is partition-
+            # aligned: a tombstone beats a sidecar; functions,
+            # arithmetic and subqueries keep the row-level path
+            if not sqltree.partition_only(
+                cond, engine.specs[name].physical_partitioning, plain=True
             ):
                 # merge-on-read: commit an O(deleted-rows) sidecar
                 # instead of rewriting touched partitions (lock inside)
-                n = engine.delete_where_dv(name, m.group(2))
+                n = engine.delete_where_dv(name, where, cond=cond)
                 return _status(engine, "delete", name, n)
         # Whole statement inside the table lock: the count and the
         # rewrite must see the same table state vs concurrent writers
@@ -713,8 +689,8 @@ def try_execute_dml(engine, query: str) -> DataFrame | None:
             t = engine.table(name)
             # WHERE p deletes rows where p is TRUE; NULL predicate keeps.
             pred = (
-                F.coalesce(F.expr(m.group(2)), F.lit(False))
-                if m.group(2)
+                F.coalesce(F.expr(where), F.lit(False))
+                if where
                 else F.lit(True)
             )
             doomed, kept = t.filter(pred), t.filter(~pred)
@@ -748,23 +724,20 @@ def try_execute_dml(engine, query: str) -> DataFrame | None:
                     engine.overwrite(name, kept, allow_drop=False)
         return _status(engine, "delete", name, n)
 
-    m = _UPDATE.match(query)
-    if m:
-        name = _resolve(engine, m.group(1))
+    if kind == "UpdateTable":
+        name = _target(engine, plan)
         if name is None:
             return None
         with engine._lock(name):
             t = engine.table(name)
-            set_sql, where_sql = _split_where(m.group(2))
+            conds = sqltree.seq(plan.condition().toList())
+            where_sql = sqltree.text(query, conds[0]) if conds else None
             pairs = []
-            for clause in _split_top_level(set_sql):
-                col, eq, expr = clause.partition("=")
-                col = col.strip()
-                if not eq or not re.fullmatch(r"[A-Za-z_]\w*", col):
-                    raise ValueError(f"cannot parse SET clause: {clause!r}")
+            for a in sqltree.seq(plan.assignments()):
+                col = sqltree.name(a.key())
                 if col not in t.columns:
                     raise ValueError(f"UPDATE {name}: no column {col!r}")
-                pairs.append((col, expr.strip()))
+                pairs.append((col, sqltree.text(query, a.value())))
             spec = engine.specs[name]
             # Delta's generated-column rule for UPDATE: when a SET
             # touches a source column of a generated column (and the
@@ -817,6 +790,7 @@ def try_execute_dml(engine, query: str) -> DataFrame | None:
                     name,
                     where_sql or "true",
                     {c: F.expr(e) for c, e in pairs},
+                    cond=conds[0] if conds else None,
                 )
                 return _status(engine, "update", name, n)
             pred = (
@@ -1470,7 +1444,7 @@ def try_execute_dml(engine, query: str) -> DataFrame | None:
 
         src_sql = m.group(2)
         if src_sql.startswith("("):
-            src = engine.spark.sql(src_sql[1:-1])
+            src = engine.sql(src_sql[1:-1])
         else:
             rsrc = _resolve(engine, src_sql)
             src = engine.table(rsrc) if rsrc else engine.spark.table(src_sql)
@@ -2225,13 +2199,4 @@ def try_execute_dml(engine, query: str) -> DataFrame | None:
             rows, "col_name string, data_type string, comment string"
         )
 
-    if tt:
-        # a time-travel rewrite happened but no DML shape matched — a
-        # plain pinned SELECT still deserves zone-map file skipping
-        # against the PINNED version's sidecars (VERDICT r9); anything
-        # the fast path bails on runs the rewritten text vanilla
-        fast = engine._try_zonemap_select(query, asof=tt)
-        if fast is not None:
-            return fast
-        return engine.spark.sql(query)
     return None

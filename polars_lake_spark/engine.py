@@ -38,10 +38,12 @@ import threading
 import warnings
 from dataclasses import asdict, dataclass, field
 from functools import reduce
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from polars_lake_spark import sqltree
 from polars_lake_spark.exprs import referenced_columns
 from polars_lake_spark.layout import (
     BUCKET_COL,
@@ -116,6 +118,57 @@ def view_key(name: str) -> str:
                 "(need [A-Za-z_][A-Za-z0-9_]*, no '__')"
             )
     return "__".join(parts)
+
+
+class _Select(NamedTuple):
+    """A single-table SELECT the fast paths may answer: the resolved
+    engine table (``version`` set for a time-travel view), the select
+    and GROUP BY items, the WHERE condition and the relation node."""
+
+    name: str
+    version: int | None
+    items: list
+    groups: list | None
+    cond: object
+    rel: object
+
+
+def _call(item) -> tuple[str, list, str | None] | None:
+    """``(function, args, alias)`` of a select item that is one plain,
+    non-DISTINCT function call, aliased or not; None otherwise."""
+    alias = item.name() if sqltree.kind(item) == "Alias" else None
+    if sqltree.kind(item) in ("Alias", "UnresolvedAlias"):
+        item = item.child()
+    if sqltree.kind(item) != "UnresolvedFunction" or item.isDistinct():
+        return None
+    return sqltree.name(item).lower(), sqltree.children(item), alias
+
+
+def _count_star(item) -> str | None:
+    """Output name of a ``COUNT(*)``/``COUNT(1)`` select item (the AS
+    alias, else Spark's own ``count(1)``); None for any other item."""
+    call = _call(item)
+    if call and call[0] == "count" and len(call[1]) == 1:
+        if sqltree.literal(call[1][0]) == (True, 1):
+            return call[2] or "count(1)"
+    return None
+
+
+def _qualifiers(exprs) -> list[list[str]]:
+    """Lower-cased name parts of every column reference and ``t.*``
+    target in ``exprs``."""
+    out = []
+    for e in exprs:
+        for n in sqltree.walk(e):
+            k = sqltree.kind(n)
+            if k == "UnresolvedAttribute":
+                out.append(sqltree.seq(n.nameParts()))
+            elif k == "UnresolvedStar":
+                out.extend(
+                    sqltree.seq(q) + ["*"]
+                    for q in sqltree.seq(n.target().toList())
+                )
+    return [[p.lower() for p in q] for q in out]
 
 
 class ConstraintViolationError(ValueError):
@@ -1002,38 +1055,29 @@ class Engine:
         ``self.last_scan_report`` records files_total/files_kept for
         observability (per thread).  Unversioned/in-memory tables just
         filter."""
-        return self._scan_pruned(name, predicate, version).filter(predicate)
+        return self._scan_conjuncts(
+            name, self._conjuncts(predicate), version
+        ).filter(predicate)
 
-    def _scan_pruned(
-        self, name: str, predicate: str, version: int | None = None
-    ) -> DataFrame:
-        """Zone-map-pruned but UNfiltered read (internal): drops files
-        whose stat ranges cannot satisfy ``predicate``'s simple
-        conjuncts, but does NOT apply the predicate — the caller must
-        re-apply it in full (as a DataFrame filter or a SQL WHERE)."""
-        if name not in self.specs and name not in self._mem:
-            self.load_table(name)
-        spec = self.specs.get(name)
-        report = {"files_total": 0, "files_kept": 0}
-        self.last_scan_report = report
-        if name in self._mem or spec is None or not spec.versioned:
-            return self.table(name, version)
+    def _conjuncts(self, predicate: str, cond=None) -> list:
+        """Zone-map conjuncts (``zonemaps.parse_conjuncts``) of a
+        predicate: of ``cond``, its parse tree, when a SQL route already
+        holds one, else of Spark's parse of the string."""
         from polars_lake_spark.zonemaps import parse_conjuncts
 
-        return self._scan_conjuncts(
-            name, parse_conjuncts(predicate), version, report=report
-        )
+        if cond is None:
+            cond = sqltree.parse_expression(self.spark, predicate)
+        return parse_conjuncts(cond)
 
     def _scan_conjuncts(
         self,
         name: str,
         conj: list,
         version: int | None = None,
-        report: dict | None = None,
     ) -> DataFrame:
         """Zone-map-pruned UNfiltered read from PRE-PARSED conjuncts
         (zonemaps.parse_conjuncts tuples) — the layer below
-        ``_scan_pruned`` for callers that already hold exact literal
+        ``scan_where`` for callers that already hold exact literal
         values a SQL round-trip could distort (the CDC watermark probes
         bound the scan by batch-key min/max, where e.g. a Decimal key
         printed as a float literal could prune a file that still holds
@@ -1043,9 +1087,8 @@ class Engine:
         if name not in self.specs and name not in self._mem:
             self.load_table(name)
         spec = self.specs.get(name)
-        if report is None:
-            report = {"files_total": 0, "files_kept": 0}
-            self.last_scan_report = report
+        report = {"files_total": 0, "files_kept": 0}
+        self.last_scan_report = report
         if name in self._mem or spec is None or not spec.versioned:
             return self.table(name, version)
         report["conjuncts"] = len(conj)
@@ -1057,7 +1100,7 @@ class Engine:
         )
 
     def count_where(
-        self, name: str, predicate: str, version: int | None = None
+        self, name: str, predicate: str, version: int | None = None, cond=None
     ) -> int:
         """Selective COUNT answered mostly from zone-map METADATA: files
         whose recorded ranges prove EVERY row matches contribute their
@@ -1077,7 +1120,9 @@ class Engine:
         * unversioned / in-memory / zone-map-less tables just count.
 
         ``last_scan_report`` additionally records
-        ``full_match_files``/``full_match_rows``."""
+        ``full_match_files``/``full_match_rows``.  ``cond`` is the
+        predicate's parse tree when the caller holds it (the SQL
+        route)."""
         if name not in self.specs and name not in self._mem:
             self.load_table(name)
         spec = self.specs.get(name)
@@ -1085,11 +1130,16 @@ class Engine:
             return self.table(name, version).filter(predicate).count()
         from polars_lake_spark.zonemaps import parse_conjuncts_exact
 
-        conj = parse_conjuncts_exact(predicate)
+        if cond is None:
+            cond = sqltree.parse_expression(self.spark, predicate)
+        conj = parse_conjuncts_exact(cond)
         store = self._snapstore(name)
         snap = store.load(version)
         if conj is None or (snap.meta or {}).get("dv"):
-            return self.scan_where(name, predicate, version).count()
+            df = self._scan_conjuncts(
+                name, self._conjuncts(predicate, cond), version
+            )
+            return df.filter(predicate).count()
         report = {"files_total": 0, "files_kept": 0}
         full = {"rows": 0, "files": 0}
         df = store.read(
@@ -1206,14 +1256,6 @@ class Engine:
                 seen = True
         return (lo, hi) if seen else None
 
-    _META_MINMAX = re.compile(
-        r"^\s*SELECT\s+(MIN|MAX)\s*\(\s*([A-Za-z_]\w*)\s*\)\s*"
-        r"(?:AS\s+(\w+)\s*)?"
-        r"(?:,\s*(MIN|MAX)\s*\(\s*([A-Za-z_]\w*)\s*\)\s*(?:AS\s+(\w+)\s*)?)?"
-        r"FROM\s+([A-Za-z_][\w.]*)(?:\s+WHERE\s+(.+))?\s*$",
-        re.I | re.S,
-    )
-
     def _partition_prefixes(self, name: str, pred: str) -> set[str] | None:
         """Partition_by-prefix relpaths whose TYPED values satisfy a
         partition-only predicate — from the snapshot MAPPING keys alone,
@@ -1258,8 +1300,8 @@ class Engine:
             return None
         return {r["__rel"] for r in flt.select("__rel").collect()}
 
-    def _try_meta_minmax(self, query: str) -> DataFrame | None:
-        """``SELECT MIN(c)[, MAX(d)] FROM t [WHERE <partition-only
+    def _try_meta_minmax(self, query: str, sel: _Select) -> DataFrame | None:
+        """``SELECT MIN(c)|MAX(c) [AS a], ... FROM t [WHERE <partition-only
         pred>]`` from sidecar metadata (see :meth:`minmax_meta`); falls
         through whenever exactness isn't provable.  A partition-column
         WHERE restricts the sidecar walk to the satisfying partitions'
@@ -1267,49 +1309,44 @@ class Engine:
         restriction is exact); any other WHERE falls through.  Output
         columns named like Spark's own plan (``min(c)``/``max(c)``) or
         the AS aliases, cast to the table's column types."""
-        query = self._strip_stmt(query)
-        masked = self._quote_mask(query)
-        m = self._META_MINMAX.match(masked)
-        if m is None:
+        if sel.groups is not None:
             return None
-        from polars_lake_spark import dml
-
-        name = dml._resolve(self, m.group(7))
-        if name is None or name in self._mem:
-            return None
-        spec = self.specs.get(name)
-        if spec is None or not (spec.versioned and spec.zone_maps):
+        aggs = []
+        for item in sel.items:
+            call = _call(item)
+            if not call or call[0] not in ("min", "max") or len(call[1]) != 1:
+                return None
+            col = sqltree.column(call[1][0])
+            if col is None:
+                return None
+            aggs.append((call[0], col, call[2]))
+        spec = self.specs[sel.name]
+        if not (spec.versioned and spec.zone_maps):
             return None
         prefixes = None
-        if m.group(8):
-            if self._ZM_BAIL.search(masked[m.start(8) : m.end(8)]):
-                return None
-            pred = query[m.start(8) : m.end(8)]
-            prefixes = self._partition_prefixes(name, pred)
+        if sel.cond is not None:
+            prefixes = self._partition_prefixes(
+                sel.name, sqltree.text(query, sel.cond)
+            )
             if prefixes is None:
                 return None
-        aggs = [(m.group(1), m.group(2), m.group(3))]
-        if m.group(4):
-            aggs.append((m.group(4), m.group(5), m.group(6)))
-        dtypes = dict(self.table(name).dtypes)
+        dtypes = dict(self.table(sel.name).dtypes)
         cache: dict[str, tuple | None] = {}
         cols = []
         try:
             for fn, col, alias in aggs:
-                key = next(
-                    (c for c in dtypes if c.lower() == col.lower()), None
-                )
+                key = next((c for c in dtypes if c.lower() == col), None)
                 if key is None:
                     return None
                 if key not in cache:
                     cache[key] = self.minmax_meta(
-                        name, key, relpath_prefixes=prefixes
+                        sel.name, key, relpath_prefixes=prefixes
                     )
                 mm = cache[key]
                 if mm is None:
                     return None
-                val = mm[0] if fn.upper() == "MIN" else mm[1]
-                cname = alias or f"{fn.lower()}({key})"
+                val = mm[0] if fn == "min" else mm[1]
+                cname = alias or f"{fn}({key})"
                 cols.append(F.lit(val).cast(dtypes[key]).alias(cname))
             return self.spark.range(1).select(*cols)
         except Exception:
@@ -1634,192 +1671,164 @@ class Engine:
         (``/root/reference/src/database.rs:50-56`` analog; the persistent
         catalog replaces its per-query SQLContext rebuild).
 
-        DML and maintenance statements over engine tables route through
-        the real mutation paths (polars_lake_spark.dml) and return a
-        one-row (operation, table, n_affected) status frame: DELETE
-        FROM, UPDATE ... SET, INSERT INTO [(cols)] SELECT, MERGE INTO
-        ... USING ... WHEN [NOT] MATCHED ..., CREATE TABLE AS SELECT,
-        DROP TABLE [IF EXISTS] (durable — removes files), VACUUM t
-        [RETAIN n], OPTIMIZE t [ZORDER BY (cols)].  Everything else is
-        vanilla Spark SQL."""
+        Spark's own parser reads each statement ONCE
+        (:func:`polars_lake_spark.dml.parse_statement`; a time-travel
+        splice parses once more) and it routes by its tree: DELETE and
+        UPDATE run the engine's mutation paths, and a single-table SELECT
+        may answer from metadata (COUNT(*), partition-grouped or
+        partition-predicate COUNT, MIN/MAX) or through zone-map file
+        skipping.  MERGE, INSERT, CTAS, DDL and the engine-only
+        statements route by prefix regex in :mod:`polars_lake_spark.dml`:
+        Spark has no grammar for the engine-only ones, and the engine
+        forms of the rest add clauses Spark's plans do not carry.  DML
+        and engine statements return a one-row (operation, table,
+        n_affected) status frame; everything else is vanilla Spark SQL."""
         from polars_lake_spark import dml
 
-        res = dml.try_execute_dml(self, query)
+        query, plan, asof = dml.parse_statement(self, query)
+        res = dml.try_execute_dml(self, query, plan)
         if res is not None:
             return res
-        fast = self._try_meta_count(query)
-        if fast is not None:
-            return fast
-        fast = self._try_meta_group_count(query)
-        if fast is not None:
-            return fast
-        fast = self._try_meta_partition_count(query)
-        if fast is not None:
-            return fast
-        fast = self._try_meta_minmax(query)
-        if fast is not None:
-            return fast
-        fast = self._try_zonemap_select(query)
-        if fast is not None:
-            return fast
+        sel = plan is not None and self._single_table_select(plan, asof)
+        if sel:
+            paths = [self._try_zonemap_select]
+            if sel.version is None:
+                paths = [
+                    self._try_meta_count,
+                    self._try_meta_partition_count,
+                    self._try_meta_minmax,
+                ] + paths
+            for path in paths:
+                fast = path(query, sel)
+                if fast is not None:
+                    return fast
         return self.spark.sql(query)
 
-    _META_COUNT = re.compile(
-        r"^\s*SELECT\s+COUNT\s*\(\s*(?:\*|1)\s*\)\s*(?:AS\s+(\w+))?"
-        r"\s+FROM\s+([A-Za-z_][\w.]*)\s*;?\s*$",
-        re.I,
-    )
+    def _single_table_select(self, plan, asof: dict) -> _Select | None:
+        """The SELECT fast paths' common shape: ``SELECT items FROM t
+        [WHERE cond] [GROUP BY groups]`` over one engine table (``asof``
+        maps a spliced time-travel view to its pinned version).  None for
+        anything else — a join, an alias or subquery in FROM, a hint, a
+        CTE, DISTINCT, HAVING, ORDER BY, LIMIT, a set operation, or an
+        expression :func:`sqltree.opaque` flags — which runs vanilla."""
+        k = sqltree.kind(plan)
+        if k == "Project":
+            items, groups = sqltree.seq(plan.projectList()), None
+        elif k == "Aggregate":
+            items = sqltree.seq(plan.aggregateExpressions())
+            groups = sqltree.seq(plan.groupingExpressions())
+        else:
+            return None
+        child, cond = plan.child(), None
+        if sqltree.kind(child) == "Filter":
+            child, cond = child.child(), child.condition()
+        if sqltree.kind(child) != "UnresolvedRelation":
+            return None
+        if any(
+            sqltree.opaque(e)
+            for e in items + (groups or []) + ([cond] if cond else [])
+        ):
+            return None
+        from polars_lake_spark import dml
 
-    def _try_meta_count(self, query: str) -> DataFrame | None:
+        raw = sqltree.name(child)
+        name, version = asof.get(raw) or (dml._resolve(self, raw), None)
+        if name is None or name in self._mem:
+            return None
+        return _Select(name, version, items, groups, cond, child)
+
+    def _count_frame(self, n: int, alias: str) -> DataFrame:
+        """One-row local answer of a metadata COUNT."""
+        return self.spark.createDataFrame([(int(n),)], "cnt bigint").select(
+            F.col("cnt").alias(alias)
+        )
+
+    def _try_meta_count(self, query: str, sel: _Select) -> DataFrame | None:
         """Metadata-only ``SELECT COUNT(*) FROM t``: the count comes
         from parquet footers (minus live DV refs — :meth:`meta_row_count`
         is DV-aware), so the most common dashboard query never scans a
         byte of data — at 100 TB a full-table count is a cluster-wide
         job; this is a driver-side footer walk.  Strictly conservative:
-        any WHERE/alias-less-complexity beyond the exact shape, an
-        unknown or in-memory table, or a table without countable footers
-        falls through to the vanilla plan.  The output column is named
-        ``count(1)`` exactly like Spark's own plan (or the AS alias)."""
-        m = self._META_COUNT.match(query)
-        if m is None:
+        any WHERE/GROUP BY or second item, an in-memory table, or a table
+        without countable footers falls through to the vanilla plan.  The
+        output column is named ``count(1)`` exactly like Spark's own plan
+        (or the AS alias)."""
+        if sel.groups is not None or sel.cond is not None:
             return None
-        from polars_lake_spark import dml
+        alias = len(sel.items) == 1 and _count_star(sel.items[0])
+        if not alias:
+            return None
+        n = self.meta_row_count(sel.name)
+        return None if n is None else self._count_frame(n, alias)
 
-        name = dml._resolve(self, m.group(2))
-        if name is None or name in self._mem:
-            return None
-        n = self.meta_row_count(name)
-        if n is None:
-            return None
-        alias = m.group(1) or "count(1)"
-        return self.spark.createDataFrame([(int(n),)], "cnt bigint").select(
-            F.col("cnt").alias(alias)
-        )
-
-    # The FROM/WHERE keywords are captured as groups so clause slices
-    # can be cut BETWEEN the delimiters on the ORIGINAL text: the
-    # non-greedy clause groups match against the quote-MASKED copy,
-    # where a trailing string literal reads as blank space — slicing by
-    # their spans truncated "grp = 'g0'" to "grp =" (r10 count fast
-    # path surfaced it; the old path bailed on the unparseable rump).
-    _ZM_SELECT = re.compile(
-        r"^\s*(SELECT)\s+(.+?)\s+(FROM)\s+([A-Za-z_][\w.]*)\s+(WHERE)\s+"
-        r"(.+?)\s*;?\s*$",
-        re.I | re.S,
-    )
-    _ZM_BAIL = re.compile(
-        r"\b(JOIN|GROUP\s+BY|ORDER\s+BY|HAVING|LIMIT|OFFSET|UNION"
-        r"|INTERSECT|EXCEPT|OVER|WINDOW|QUALIFY|DISTINCT|VERSION|TIMESTAMP"
-        r"|SORT\s+BY|DISTRIBUTE\s+BY|CLUSTER\s+BY|LATERAL"
-        r")\b|\(\s*SELECT",
-        re.I,
-    )
     # thread-safe staging-view namer (next() on itertools.count is
     # atomic) — concurrent fast-path SELECTs must never share a view
     _zm_view_seq = itertools.count(1)
 
-    @staticmethod
-    def _quote_mask(query: str) -> str:
-        """A copy of ``query`` with string-literal CONTENTS blanked
-        (length preserved), so keyword regexes can neither bail on nor
-        mis-slice text inside literals; match spans index the original
-        text.  Shared by every SQL fast-path matcher."""
-        masked, q, i = list(query), None, 0
-        while i < len(query):
-            ch = query[i]
-            if q:
-                if ch == "\\":
-                    masked[i] = masked[min(i + 1, len(query) - 1)] = " "
-                    i += 2
-                    continue
-                if ch == q:
-                    q = None
-                masked[i] = " "
-            elif ch in "'\"":
-                q, masked[i] = ch, " "
-            i += 1
-        return "".join(masked)
-
     def _try_zonemap_select(
-        self, query: str, asof: dict[str, tuple[str, int]] | None = None
+        self, query: str, sel: _Select
     ) -> DataFrame | None:
         """SQL fast-path for zone-map file skipping: a plain
         single-table ``SELECT <list> FROM t WHERE <pred>`` over a
-        versioned engine table routes through :meth:`scan_where`, so the
-        predicate's prunable conjuncts drop files before Spark plans the
-        scan.  STRICTLY conservative: any join/group/order/sort/limit/
-        window/set-op/subquery/time-travel shape or a table alias falls
-        through to vanilla ``spark.sql`` (the regex requires WHERE to
-        directly follow the bare table name).  Semantics are identical
-        by construction: the PRUNED-but-unfiltered scan is staged as a
-        temp view ALIASED to the table name, and the original select
-        list + WHERE run over it via Spark SQL — so table-qualified
-        column references (``t.x``, any case) resolve exactly as on the
-        vanilla path (ADVICE r9), and the full predicate is always
-        re-applied (pruning can only drop IO).  The staging view is
-        dropped as soon as the plan is built (spark.sql analyzes
-        eagerly), so long sessions don't leak catalog entries."""
-        # Match against a QUOTE-MASKED copy (string literals blanked,
-        # length preserved) so a keyword inside a literal can neither
-        # trigger the bail nor mis-slice the clauses; spans index the
-        # original text.
-        masked = self._quote_mask(query)
-        m = self._ZM_SELECT.match(masked)
-        if m is None or self._ZM_BAIL.search(masked):
+        versioned engine table (or a time-travel view pinned to one of
+        its versions) reads a scan pruned by the predicate's conjuncts,
+        so files drop before Spark plans the scan.  Semantics are
+        identical by construction: the PRUNED-but-unfiltered scan is
+        staged as a temp view ALIASED to the table name and spliced in
+        place of the table reference, so the select list and WHERE run
+        over it unchanged via Spark SQL — table-qualified column
+        references (``t.x``, any case) resolve exactly as on the vanilla
+        path (ADVICE r9), and the full predicate is always re-applied
+        (pruning can only drop IO).  The staging view is dropped as soon
+        as the plan is built (spark.sql analyzes eagerly), so long
+        sessions don't leak catalog entries."""
+        if sel.groups is not None or sel.cond is None:
             return None
-        sel = query[m.end(1) : m.start(3)].strip()
-        raw = query[m.start(4) : m.end(4)]
-        pred = query[m.end(5) :].strip()
-        if pred.endswith(";"):
-            pred = pred[:-1].rstrip()
-        from polars_lake_spark import dml
-
-        version: int | None = None
-        if asof and raw in asof:
-            # a time-travel reference already rewritten to a pinned view
-            # (dml._rewrite_time_travel): prune against THAT version's
-            # sidecars — they describe exactly its files
-            name, version = asof[raw]
-        else:
-            name = dml._resolve(self, raw)
-        if name is None or name in self._mem:
-            return None
-        spec = self.specs[name]
+        spec = self.specs[sel.name]
         if not (spec.versioned and spec.zone_maps):
             return None
-        # The staging view is aliased to the LAST name segment, which
+        raw = sqltree.name(sel.rel)
+        alias = raw.split(".")[-1]
+        table = raw.lower().split(".")
+        count_alias = len(sel.items) == 1 and _count_star(sel.items[0])
+        quals = (
+            _qualifiers(sel.items + [sel.cond])
+            if count_alias or len(table) > 1
+            else []
+        )
+        # the staging view is aliased to the LAST name segment, which
         # resolves `tbl.x` qualifiers (case-insensitively, like Spark's
         # own resolver); a fully-qualified `db.tbl.x` reference cannot
-        # resolve against an alias — bail to the vanilla path.
-        alias = raw.split(".")[-1]
-        if "." in raw and re.search(
-            rf"\b{re.escape(raw)}\s*\.", masked, re.I
+        # resolve against an alias — vanilla path
+        if len(table) > 1 and any(
+            q[: len(table)] == table and len(q) > len(table) for q in quals
         ):
             return None
         # SELECT COUNT(*) ... WHERE: answer full-match files from footer
-        # metadata and scan only the boundary (count_where) — unless the
-        # predicate carries table qualifiers (count_where's residual
+        # metadata and scan only the boundary (count_where) — unless a
+        # reference carries the table qualifier (count_where's residual
         # filter has no alias in scope; the staging-view path below
         # handles those, still pruned)
-        mc = re.fullmatch(
-            r"\s*COUNT\s*\(\s*(?:\*|1)\s*\)\s*(?:AS\s+(\w+))?\s*", sel, re.I
-        )
-        if mc and not re.search(rf"\b{re.escape(alias)}\s*\.", masked, re.I):
-            n = self.count_where(name, pred, version=version)
-            cname = mc.group(1) or "count(1)"
-            return self.spark.createDataFrame(
-                [(int(n),)], "cnt bigint"
-            ).select(F.col("cnt").alias(cname))
+        if count_alias and not any(
+            len(q) > 1 and q[0] == alias.lower() for q in quals
+        ):
+            pred = sqltree.text(query, sel.cond)
+            n = self.count_where(
+                sel.name, pred, version=sel.version, cond=sel.cond
+            )
+            return self._count_frame(n, count_alias)
         from polars_lake_spark.zonemaps import parse_conjuncts
 
-        if not parse_conjuncts(pred):
+        conj = parse_conjuncts(sel.cond)
+        if not conj:
             return None  # nothing prunable; vanilla path is identical
-        df = self._scan_pruned(name, pred, version=version)
+        df = self._scan_conjuncts(sel.name, conj, version=sel.version)
         tmp = f"__zm_scan_{next(Engine._zm_view_seq)}"
         df.createOrReplaceTempView(tmp)
+        a, b = sqltree.span(sel.rel)
         try:
             return self.spark.sql(
-                f"SELECT {sel} FROM {tmp} AS {alias} WHERE {pred}"
+                f"{query[:a]}{tmp} AS {alias}{query[b + 1:]}"
             )
         finally:
             self.spark.catalog.dropTempView(tmp)
@@ -3246,7 +3255,7 @@ class Engine:
                 )
             self._register(name)
 
-    def delete_where_dv(self, name: str, predicate: str) -> int:
+    def delete_where_dv(self, name: str, predicate: str, cond=None) -> int:
         """Merge-on-read predicate DELETE (Delta deletion-vector analog)
         for ``deletion_vectors=True`` tables: instead of rewriting every
         partition holding a match (``replace_where`` — O(touched
@@ -3274,7 +3283,8 @@ class Engine:
         carry the DVs (shallow ones by reference).
 
         Returns the number of rows deleted. Zero-match deletes commit
-        nothing."""
+        nothing.  ``cond`` is the predicate's parse tree when the caller
+        holds it (SQL DELETE)."""
         spec = self._guard_mutable(name)
         if not (spec.versioned and spec.deletion_vectors):
             raise ValueError(
@@ -3282,8 +3292,6 @@ class Engine:
                 "use delete()/SQL DELETE (partition-scoped rewrite)"
             )
         from polars_lake_spark.snapshots import DV_FILE_COL, DV_POS_COL
-
-        from polars_lake_spark.zonemaps import parse_conjuncts
 
         with self._lock(name):
             store = self._snapstore(name)
@@ -3295,7 +3303,7 @@ class Engine:
             live = store.read(
                 self.spark,
                 with_row_refs=True,
-                prune=parse_conjuncts(predicate) or None,
+                prune=self._conjuncts(predicate, cond) or None,
             )
             # NULL predicate keeps the row, like the rewrite path
             refs = live.filter(
@@ -3795,7 +3803,7 @@ class Engine:
         return n
 
     def update_where_dv(
-        self, name: str, predicate: str, assigns: dict[str, Column]
+        self, name: str, predicate: str, assigns: dict[str, Column], cond=None
     ) -> int:
         """Merge-on-read predicate UPDATE for ``deletion_vectors`` tables:
         the matched rows' physical refs go into a DV sidecar (the old
@@ -3805,7 +3813,8 @@ class Engine:
         partition rewrite.  ``assigns`` maps column name -> replacement
         Column; unlisted columns carry the old value.  The caller must
         not assign layout columns (rows would migrate partitions — that
-        case needs the rewrite path; dml.py guards it)."""
+        case needs the rewrite path; dml.py guards it).  ``cond`` is the
+        predicate's parse tree when the caller holds it (SQL UPDATE)."""
         spec = self._guard_mutable(name)
         if not (spec.versioned and spec.deletion_vectors):
             raise ValueError(
@@ -3817,8 +3826,6 @@ class Engine:
             carried_meta,
         )
 
-        from polars_lake_spark.zonemaps import parse_conjuncts
-
         with self._lock(name):
             store = self._snapstore(name)
             base = store.load()
@@ -3827,7 +3834,7 @@ class Engine:
             live = store.read(
                 self.spark,
                 with_row_refs=True,
-                prune=parse_conjuncts(predicate) or None,
+                prune=self._conjuncts(predicate, cond) or None,
             )
             pred = F.coalesce(F.expr(predicate), F.lit(False))
             matched = live.filter(pred)
@@ -3851,8 +3858,15 @@ class Engine:
             cols = [
                 c for c in live.columns if c not in (DV_FILE_COL, DV_POS_COL)
             ]
+            # a SET value keeps its column's type (SET v = 1.0 on a
+            # DOUBLE column is a decimal literal), as on the rewrite path
             new_rows = matched.select(
-                *[assigns.get(c, F.col(c)).alias(c) for c in cols]
+                *[
+                    assigns[c].cast(live.schema[c].dataType).alias(c)
+                    if c in assigns
+                    else F.col(c)
+                    for c in cols
+                ]
             )
             # no incoming batch here: count expectation violations but
             # never drop (the old copy already left by ref — dropping
@@ -4071,34 +4085,6 @@ class Engine:
         except Exception:
             return None
 
-    # Both matchers run against the quote-MASKED text with GREEDY
-    # predicate captures and a pre-stripped trailing semicolon: a lazy
-    # capture stops INSIDE a blanked string literal (the masked blanks
-    # satisfy the \s+ before the next delimiter), truncating the
-    # original-text slice mid-literal — the exact r10 fast-path slicing
-    # lesson, re-learned here on `WHERE p <> \'2-HIGH\' GROUP BY p`.
-    _META_GROUP_COUNT = re.compile(
-        r"^\s*SELECT\s+([\w\s,]+?)\s*,\s*COUNT\s*\(\s*(?:\*|1)\s*\)\s*"
-        r"(?:AS\s+(\w+))?\s+FROM\s+([A-Za-z_][\w.]*)"
-        r"(?:\s+WHERE\s+(.+))?\s+"
-        r"GROUP\s+BY\s+([\w\s,]+?)\s*$",
-        re.I | re.S,
-    )
-    _META_COUNT_WHERE = re.compile(
-        r"^\s*SELECT\s+COUNT\s*\(\s*(?:\*|1)\s*\)\s*(?:AS\s+(\w+))?"
-        r"\s+FROM\s+([A-Za-z_][\w.]*)\s+WHERE\s+(.+)\s*$",
-        re.I | re.S,
-    )
-
-    @staticmethod
-    def _strip_stmt(query: str) -> str:
-        """Trailing whitespace + one trailing semicolon removed — match
-        spans still index the original text (only the tail shrinks)."""
-        q = query.rstrip()
-        if q.endswith(";"):
-            q = q[:-1].rstrip()
-        return q
-
     def _partition_counts_frame(self, name: str):
         """Typed driver-LOCAL frame (partition cols..., __plsq_cnt) from
         :meth:`partition_counts` — the shared base of the metadata
@@ -4177,127 +4163,65 @@ class Engine:
         except Exception:
             return None
 
-    def _try_meta_group_count(self, query: str) -> DataFrame | None:
-        """Metadata-only partition-grouped count: ``SELECT <partition
-        cols>, COUNT(*) FROM t [WHERE <partition-only pred>] GROUP BY
-        <same cols>`` answers from :meth:`partition_counts` — a
-        driver-local plan, no files read.  Strictly conservative: the
-        select list must be exactly the table's partition columns (any
-        order, no extras), the group list the same set, any WHERE must
-        reference only partition columns deterministically (see
+    def _try_meta_partition_count(
+        self, query: str, sel: _Select
+    ) -> DataFrame | None:
+        """Metadata-only partition counts: ``SELECT COUNT(*) FROM t WHERE
+        <partition-only pred>`` and ``SELECT <partition cols>, COUNT(*)
+        FROM t [WHERE <partition-only pred>] GROUP BY <same cols>``
+        answer from :meth:`partition_counts` — a driver-local plan, no
+        files read.  Partition columns never appear in parquet footers
+        (they are directory names), so the zone-map COUNT path cannot
+        certify them, but a partition-column predicate is constant per
+        partition: Spark evaluates it over the TYPED local partition
+        frame (exactly the values its own partition pruning would
+        compare).  Strictly conservative: a grouped select list must be
+        exactly the table's partition columns (any order, no extras)
+        followed by the count, the group list the same set; any WHERE
+        must reference only partition columns deterministically (see
         :meth:`_filter_partition_frame`), and the table must roll up
         from metadata; anything else falls through to the vanilla
         plan."""
-        query = self._strip_stmt(query)
-        masked = self._quote_mask(query)
-        m = self._META_GROUP_COUNT.match(masked)
-        if m is None:
-            return None
-        # the column lists and table name are regex-restricted; the only
-        # free-form slice is the WHERE text — bail there (joins, windows,
-        # subqueries, nested GROUP BY) without tripping on our own shape
-        if m.group(4) and self._ZM_BAIL.search(
-            masked[m.start(4) : m.end(4)]
-        ):
-            return None
-        from polars_lake_spark import dml
-
-        name = dml._resolve(self, m.group(3))
-        if name is None or name in self._mem:
-            return None
-        spec = self.specs[name]
-        sel = [c.strip() for c in m.group(1).split(",") if c.strip()]
-        grp = [c.strip() for c in m.group(5).split(",") if c.strip()]
-        parts = list(spec.partition_by)
+        alias = _count_star(sel.items[-1])
+        cols = [sqltree.column(e) for e in sel.items[:-1]]
+        parts = list(self.specs[sel.name].partition_by)
         low = {c.lower(): c for c in parts}
-        if (
-            not parts
-            or len(sel) != len(parts)
-            or {c.lower() for c in sel} != set(low)
-            or {c.lower() for c in grp} != set(low)
+        if sel.groups is None:
+            shape = not cols and sel.cond is not None
+        else:
+            grp = {sqltree.column(e) for e in sel.groups}
+            shape = len(cols) == len(parts) and set(cols) == grp == set(low)
+        # cheap pre-check BEFORE the footer walk: a predicate naming any
+        # column but a partition column (the zone-map path's job) never
+        # pays the O(files) stat walk on its way to falling through
+        if not (alias and shape and parts) or (
+            sel.cond is not None
+            and not sqltree.partition_only(sel.cond, parts)
         ):
             return None
-        frame = self._partition_counts_frame(name)
+        frame = self._partition_counts_frame(sel.name)
+        if frame is not None and sel.cond is not None:
+            pred = sqltree.text(query, sel.cond)
+            frame = self._filter_partition_frame(frame, parts, pred)
         if frame is None:
             return None
-        if m.group(4):
-            pred = query[m.start(4) : m.end(4)]
-            frame = self._filter_partition_frame(frame, parts, pred)
-            if frame is None:
-                return None
-        out_cols = [low[c.lower()] for c in sel]
-        alias = m.group(2) or "count(1)"
+        if sel.groups is None:
+            # sum the ≤ partition-count surviving rows DRIVER-side: one
+            # literal row, same shape as _try_meta_count
+            cnt = frame.select("__plsq_cnt").collect()
+            return self._count_frame(sum(r[0] for r in cnt), alias)
         # a fully-emptied partition (all rows DV-deleted) still has a
         # rollup row at 0 — but GROUP BY emits NO group for no rows
         out = frame.filter(F.col("__plsq_cnt") > 0).select(
-            *out_cols, F.col("__plsq_cnt").alias(alias)
+            *[low[c] for c in cols], F.col("__plsq_cnt").alias(alias)
         )
-        if m.group(4):
+        if sel.cond is not None:
             # re-materialize the filtered join of two local frames as one
             # literal frame (≤ partition-count rows) so the returned plan
             # stays a pure local scan — no join, no exchange
             rows, schema = out.collect(), out.schema
             out = self.spark.createDataFrame(rows, schema)
         return out
-
-    def _try_meta_partition_count(self, query: str) -> DataFrame | None:
-        """Metadata-only ``SELECT COUNT(*) FROM t WHERE <partition-only
-        pred>``: partition columns never appear in parquet footers (they
-        are directory names), so the zone-map COUNT path cannot certify
-        them — but :meth:`partition_counts` already knows every
-        partition's live row count, and a partition-column predicate is
-        constant per partition.  Spark evaluates the predicate over the
-        TYPED local partition frame (exactly the values its own
-        partition pruning would compare), the surviving counts sum
-        driver-locally — no FileScan.  Falls through on any predicate
-        referencing other columns, non-deterministic expressions,
-        subqueries, or join/group/order shapes."""
-        query = self._strip_stmt(query)
-        masked = self._quote_mask(query)
-        m = self._META_COUNT_WHERE.match(masked)
-        if m is None:
-            return None
-        if self._ZM_BAIL.search(masked[m.start(3) : m.end(3)]):
-            return None
-        pred = query[m.start(3) : m.end(3)]
-        from polars_lake_spark import dml
-
-        name = dml._resolve(self, m.group(2))
-        if name is None or name in self._mem:
-            return None
-        # cheap pre-check BEFORE the footer walk: analyze the predicate
-        # against an empty typed frame of just the partition columns, so
-        # a data-column COUNT WHERE (the zone-map path's job) never pays
-        # the O(files) stat walk on its way to falling through
-        parts = list(self.specs[name].partition_by)
-        if not parts:
-            return None
-        dtypes = self._partition_dtypes(name, parts)
-        if dtypes is None:
-            return None
-        empty = self.spark.createDataFrame(
-            [],
-            ", ".join(
-                f"`{c}` {t}" for c, t in zip(parts, dtypes)
-            ),
-        )
-        if self._filter_partition_frame(empty, parts, pred) is None:
-            return None
-        frame = self._partition_counts_frame(name)
-        if frame is None:
-            return None
-        flt = self._filter_partition_frame(frame, parts, pred)
-        if flt is None:
-            return None
-        alias = m.group(1) or "count(1)"
-        # sum the ≤ partition-count surviving rows DRIVER-side: the
-        # returned plan is one literal row, same shape as _try_meta_count
-        total = sum(
-            r["__plsq_cnt"] for r in flt.select("__plsq_cnt").collect()
-        )
-        return self.spark.createDataFrame(
-            [(int(total),)], "cnt bigint"
-        ).select(F.col("cnt").alias(alias))
 
     def convert_to_versioned(self, name: str) -> None:
         """CONVERT TO DELTA analog: adopt a plain on-disk parquet table

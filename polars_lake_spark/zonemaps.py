@@ -42,8 +42,9 @@ from __future__ import annotations
 import datetime
 import json
 import os
-import re
 from decimal import Decimal
+
+from polars_lake_spark import sqltree
 
 ZONEMAP = "_zonemap.json"
 # Stat at most this many columns per table (Delta's dataSkippingNumIndexedCols
@@ -94,17 +95,24 @@ def _decode(e):
     return t, v
 
 
-def _coerce(tag, decoded, lit):
+def _coerce(tag, lit):
     """Coerce a predicate literal into the stat value's domain for
     comparison; None when the literal can't live there (no pruning)."""
     try:
         if tag in ("i", "f"):
-            if isinstance(lit, (int, float)) and not isinstance(lit, bool):
-                return lit  # int/float inter-compare exactly in Python
-            return None
+            if not isinstance(lit, (int, float, Decimal)) or isinstance(
+                lit, bool
+            ):
+                return None
+            # Spark compares a DOUBLE column with a decimal literal as
+            # DOUBLE (0.1 is the nearest double, not exactly 1/10);
+            # against an integer column int/Decimal compare exactly
+            return float(lit) if tag == "f" else lit
         if tag == "s":
             return lit if isinstance(lit, str) else None
         if tag == "dec":
+            if isinstance(lit, Decimal):
+                return lit
             if isinstance(lit, (int, float)) and not isinstance(lit, bool):
                 return Decimal(str(lit))
             if isinstance(lit, str):
@@ -123,6 +131,13 @@ def _coerce(tag, decoded, lit):
     except (ValueError, ArithmeticError):
         return None
     return None
+
+
+def _lits(tag, c) -> list | None:
+    """The literal operands of conjunct ``c`` coerced into the domain of
+    stats tagged ``tag``; None when one cannot live there."""
+    vals = [_coerce(tag, v) for v in (c[2] if c[1] == "in" else c[2:])]
+    return None if any(v is None for v in vals) else vals
 
 
 # ------------------------------------------------------------- collection
@@ -246,177 +261,52 @@ def load_zonemap(write_dir: str) -> dict | None:
 
 
 # ----------------------------------------------------------------- pruning
-_OPS = ("<=", ">=", "!=", "<>", "=", "<", ">")
-_IDENT = r"`?([A-Za-z_]\w*)`?"
-_NUM = r"-?\d+(?:\.\d+)?(?:[eE]-?\d+)?"
+# Catalyst comparison node -> (op, op with its operands swapped)
+_CMP = {
+    "EqualTo": ("=", "="),
+    "LessThan": ("<", ">"),
+    "LessThanOrEqual": ("<=", ">="),
+    "GreaterThan": (">", "<"),
+    "GreaterThanOrEqual": (">=", "<="),
+}
 
 
-def _literal(tok: str):
-    """Parse one SQL literal token → (ok, value)."""
-    tok = tok.strip()
-    m = re.fullmatch(r"'((?:[^']|'')*)'", tok, re.S)
-    if m:
-        return True, m.group(1).replace("''", "'")
-    m = re.fullmatch(r'"((?:[^"]|"")*)"', tok, re.S)
-    if m:
-        return True, m.group(1).replace('""', '"')
-    if re.fullmatch(_NUM, tok):
-        return True, float(tok) if re.search(r"[.eE]", tok) else int(tok)
-    low = tok.lower()
-    if low == "true":
-        return True, True
-    if low == "false":
-        return True, False
-    m = re.fullmatch(r"(?:DATE|TIMESTAMP)\s*'([^']*)'", tok, re.I)
-    if m:
-        return True, m.group(1)
-    return False, None
+def _conjunct(e) -> tuple | None:
+    """One conjunct tuple from one expression node, or None."""
+    k, ch = sqltree.kind(e), sqltree.children(e)
+    cols = [sqltree.column(c) for c in ch]
+    lits = [sqltree.literal(c) for c in ch]
+    if k == "Not" and sqltree.kind(ch[0]) == "EqualTo":
+        c = _conjunct(ch[0])
+        return c and (c[0], "!=", c[2])
+    if k in ("IsNull", "IsNotNull") and cols[0]:
+        return cols[0], "isnull" if k == "IsNull" else "notnull"
+    if k in _CMP and cols[0] and lits[1][0]:
+        return cols[0], _CMP[k][0], lits[1][1]
+    if k in _CMP and cols[1] and lits[0][0]:
+        return cols[1], _CMP[k][1], lits[0][1]
+    if not (len(ch) > 1 and cols[0] and all(ok for ok, _ in lits[1:])):
+        return None
+    vals = [v for _, v in lits[1:]]
+    if k == "In":
+        return cols[0], "in", vals
+    if k == "UnresolvedFunction" and sqltree.name(e).lower() == "between":
+        return cols[0], "between", vals[0], vals[1]
+    return None
 
 
-def _split_top_and(pred: str) -> list[str]:
-    """Split on top-level AND, quote/paren-aware, keeping BETWEEN's AND
-    attached to its conjunct."""
-    parts, buf, depth, q, i, n = [], [], 0, None, 0, len(pred)
-    pending_between = False
-    while i < n:
-        ch = pred[i]
-        if q:
-            if ch == "\\":
-                buf.append(pred[i : i + 2])
-                i += 2
-                continue
-            if ch == q:
-                q = None
-            buf.append(ch)
-            i += 1
-            continue
-        if ch in "'\"":
-            q = ch
-            buf.append(ch)
-            i += 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if depth == 0:
-            m = re.match(r"\bBETWEEN\b", pred[i:], re.I)
-            if m and (i == 0 or not pred[i - 1].isalnum()):
-                pending_between = True
-            m = re.match(r"\bAND\b", pred[i:], re.I)
-            if m and (i == 0 or not pred[i - 1].isalnum()):
-                if pending_between:
-                    pending_between = False
-                else:
-                    parts.append("".join(buf))
-                    buf = []
-                    i += 3
-                    continue
-        buf.append(ch)
-        i += 1
-    parts.append("".join(buf))
-    return [p.strip() for p in parts if p.strip()]
-
-
-def parse_conjuncts(pred: str) -> list[tuple]:
-    """Extract the prunable conjuncts of ``pred``.  Each is one of
-    ``(col, op, lit)`` with op in =,!=,<,<=,>,>=; ``(col, 'in', [lits])``;
-    ``(col, 'between', lo, hi)``; ``(col, 'isnull')``; ``(col,
-    'notnull')``.  Conjuncts that don't match these shapes are simply
-    dropped (they prune nothing; the residual filter still applies
-    them).  An OR anywhere outside parens makes the whole predicate
-    non-conjunctive → no pruning."""
-    # Top-level OR makes the predicate non-conjunctive → no pruning.
-    # String literals mask first (an OR inside quotes is data), then
-    # paren groups collapse iteratively so only TOP-level ORs remain.
-    s, q, i, out_chars = pred, None, 0, []
-    while i < len(s):
-        ch = s[i]
-        if q:
-            if ch == "\\":
-                out_chars.append("  ")
-                i += 2
-                continue
-            if ch == q:
-                q = None
-            out_chars.append(" ")
-        elif ch in "'\"":
-            q = ch
-            out_chars.append(" ")
-        else:
-            out_chars.append(ch)
-        i += 1
-    s = "".join(out_chars)
-    while re.search(r"\([^()]*\)", s):
-        s = re.sub(r"\([^()]*\)", " ", s)
-    if re.search(r"\bOR\b", s, re.I):
+def parse_conjuncts(expr) -> list[tuple]:
+    """The prunable conjuncts of a parsed predicate
+    (``sqltree.parse_expression``).  Each is one of ``(col, op, lit)``
+    with op in =,!=,<,<=,>,>=; ``(col, 'in', [lits])``; ``(col,
+    'between', lo, hi)``; ``(col, 'isnull')``; ``(col, 'notnull')``.
+    Top-level AND operands of other shapes are simply dropped (they
+    prune nothing; the residual filter still applies them); a top-level
+    OR is one such operand, so it prunes nothing.  ``expr`` None (an
+    unparseable predicate) prunes nothing."""
+    if expr is None:
         return []
-    out = []
-    for part in _split_top_and(pred):
-        part = part.strip()
-        while part.startswith("(") and part.endswith(")"):
-            inner = part[1:-1].strip()
-            if not inner or inner.count("(") != inner.count(")"):
-                break
-            part = inner
-        m = re.fullmatch(
-            rf"{_IDENT}\s+IS\s+NOT\s+NULL", part, re.I
-        )
-        if m:
-            out.append((m.group(1).lower(), "notnull"))
-            continue
-        m = re.fullmatch(rf"{_IDENT}\s+IS\s+NULL", part, re.I)
-        if m:
-            out.append((m.group(1).lower(), "isnull"))
-            continue
-        m = re.fullmatch(
-            rf"{_IDENT}\s+BETWEEN\s+(\S+)\s+AND\s+(\S+)", part, re.I
-        )
-        if m:
-            ok1, lo = _literal(m.group(2))
-            ok2, hi = _literal(m.group(3))
-            if ok1 and ok2:
-                out.append((m.group(1).lower(), "between", lo, hi))
-            continue
-        m = re.fullmatch(rf"{_IDENT}\s+IN\s*\((.*)\)", part, re.I | re.S)
-        if m:
-            lits = []
-            ok_all = True
-            for tok in m.group(2).split(","):
-                ok, v = _literal(tok)
-                if not ok:
-                    ok_all = False
-                    break
-                lits.append(v)
-            if ok_all and lits:
-                out.append((m.group(1).lower(), "in", lits))
-            continue
-        for op in _OPS:
-            # col OP lit
-            m = re.fullmatch(
-                rf"{_IDENT}\s*{re.escape(op)}\s*(.+)", part, re.S
-            )
-            if m:
-                ok, v = _literal(m.group(2))
-                if ok:
-                    out.append(
-                        (m.group(1).lower(), "!=" if op == "<>" else op, v)
-                    )
-                break
-            # lit OP col (flip)
-            m = re.fullmatch(
-                rf"(.+?)\s*{re.escape(op)}\s*{_IDENT}", part, re.S
-            )
-            if m:
-                ok, v = _literal(m.group(1))
-                if ok:
-                    flip = {
-                        "<": ">", ">": "<", "<=": ">=", ">=": "<=",
-                        "=": "=", "!=": "!=", "<>": "!=",
-                    }[op]
-                    out.append((m.group(2).lower(), flip, v))
-                break
-    return out
+    return [c for c in map(_conjunct, sqltree.conjuncts(expr)) if c]
 
 
 def _range_may_match(lo, hi, op, lit) -> bool:
@@ -467,42 +357,33 @@ def file_survives(fstats: dict, conjuncts: list[tuple]) -> bool:
             continue
         # any comparison that raises (e.g. tz-aware stats vs a naive
         # literal) conservatively keeps the file
+        vals = _lits(tlo, c)
         try:
-            if kind == "between":
-                a, b = _coerce(tlo, lo, c[2]), _coerce(tlo, lo, c[3])
-                if a is None or b is None:
-                    continue
-                if hi < a or lo > b:
-                    return False
+            if vals is None:
                 continue
-            if kind == "in":
-                vals = [_coerce(tlo, lo, v) for v in c[2]]
-                if any(v is None for v in vals):
-                    continue
+            if kind == "between":
+                if hi < vals[0] or lo > vals[1]:
+                    return False
+            elif kind == "in":
                 if not any(lo <= v <= hi for v in vals):
                     return False
-                continue
-            lit = _coerce(tlo, lo, c[2])
-            if lit is None:
-                continue
-            if not _range_may_match(lo, hi, kind, lit):
+            elif not _range_may_match(lo, hi, kind, vals[0]):
                 return False
         except TypeError:
             continue
     return True
 
 
-def parse_conjuncts_exact(pred: str) -> list[tuple] | None:
+def parse_conjuncts_exact(expr) -> list[tuple] | None:
     """``parse_conjuncts``, but only when EVERY top-level conjunct
     parsed.  Pruning can afford to drop unsupported conjuncts (the
     residual filter re-applies them); an ALL-MATCH certificate cannot —
     counting a file's rows as matching requires the whole predicate
     captured.  None = incomplete capture (caller must scan)."""
-    conj = parse_conjuncts(pred)
+    conj = parse_conjuncts(expr)
     if not conj:
         return None
-    parts = [p for p in _split_top_and(pred) if p.strip()]
-    return conj if len(conj) == len(parts) else None
+    return conj if len(conj) == len(sqltree.conjuncts(expr)) else None
 
 
 def file_all_match(
@@ -560,35 +441,26 @@ def file_all_match(
             and kind not in (">", ">=", "!=")
         ):
             return None
+        vals = _lits(tlo, c)
         try:
+            if vals is None:
+                return None
             if kind == "between":
-                a, b = _coerce(tlo, lo, c[2]), _coerce(tlo, lo, c[3])
-                if a is None or b is None:
-                    return None
-                if a <= lo and hi <= b:
-                    continue
+                ok = vals[0] <= lo and hi <= vals[1]
+            elif kind == "in":
+                ok = lo == hi and any(v == lo for v in vals)
+            else:
+                lit = vals[0]
+                ok = {
+                    "=": lo == hi == lit,
+                    "!=": hi < lit or lo > lit,
+                    "<": hi < lit,
+                    "<=": hi <= lit,
+                    ">": lo > lit,
+                    ">=": lo >= lit,
+                }[kind]
+            if not ok:
                 return None
-            if kind == "in":
-                vals = [_coerce(tlo, lo, v) for v in c[2]]
-                if any(v is None for v in vals):
-                    return None
-                if lo == hi and any(v == lo for v in vals):
-                    continue
-                return None
-            lit = _coerce(tlo, lo, c[2])
-            if lit is None:
-                return None
-            ok = {
-                "=": lo == hi == lit,
-                "!=": hi < lit or lo > lit,
-                "<": hi < lit,
-                "<=": hi <= lit,
-                ">": lo > lit,
-                ">=": lo >= lit,
-            }[kind]
-            if ok:
-                continue
-            return None
         except TypeError:
             return None
     return rows

@@ -7,6 +7,7 @@ partition pruning still applies; compaction folds DVs in."""
 import glob
 import os
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -545,6 +546,80 @@ def test_dv_dml_scan_prunes_files(spark, eng, monkeypatch):
     assert calls["n"] == 8 and calls["kept"] == 1
     assert eng.table("zd").filter("v = -1.0").count() == 3
     assert eng.table("zd").count() == 1999
+
+
+def test_dv_dml_escaped_literal(spark, eng):
+    """DELETE/UPDATE on a DV table match rows by Spark's reading of the
+    literal: 'x\\\\' is x\\ (one backslash).  The ref scan's zone-map
+    pruning must use the same value, or it drops the file holding the
+    match and the statement silently affects nothing."""
+    df = spark.createDataFrame(
+        [(1, "A"), (2, "x\\"), (3, "B")], "id bigint, s string"
+    ).repartitionByRange(3, "id")
+    for name in ("ed", "eu"):
+        eng.create_table(
+            name, df, keys=["id"], versioned=True, deletion_vectors=True
+        )
+    st = eng.sql("DELETE FROM ed WHERE s = 'x\\\\'").head()
+    assert st["n_affected"] == 1
+    assert sorted(r.id for r in eng.table("ed").collect()) == [1, 3]
+    st = eng.sql("UPDATE eu SET s = 'y' WHERE s = 'x\\\\'").head()
+    assert st["n_affected"] == 1
+    assert {r.id: r.s for r in eng.table("eu").collect()} == {
+        1: "A", 2: "y", 3: "B",
+    }
+
+
+def test_dv_dml_decimal_literal_on_double(spark, eng, tmp_path):
+    """The DV ref scan prunes a DOUBLE column against the decimal
+    literal 0.1 as Spark compares it — as the double 0.1 — so the files
+    whose min = max = 0.1 keep their matches; the rows the UPDATE
+    re-appends keep v DOUBLE, not the SET literal's decimal type."""
+    df = spark.createDataFrame(
+        [(1, 0.1), (2, 0.3), (3, 0.1)], "id bigint, v double"
+    ).repartitionByRange(3, "id")
+    for name in ("dd", "du"):
+        eng.create_table(
+            name, df, keys=["id"], versioned=True, deletion_vectors=True
+        )
+    st = eng.sql("DELETE FROM dd WHERE v = 0.1 AND id = 1").head()
+    assert st["n_affected"] == 1
+    st = eng.sql("DELETE FROM dd WHERE v <= 0.1").head()
+    assert st["n_affected"] == 1
+    assert [r.id for r in eng.table("dd").collect()] == [2]
+    st = eng.sql("UPDATE du SET v = 1.0 WHERE v <= 0.1").head()
+    assert st["n_affected"] == 2
+    assert {r.id: r.v for r in eng.table("du").collect()} == {
+        1: 1.0, 2: 0.3, 3: 1.0,
+    }
+    files = glob.glob(str(tmp_path / "du" / "**" / "*.parquet"), recursive=True)
+    assert files
+    for f in files:
+        schema = pq.read_schema(f)
+        if "v" in schema.names:
+            assert str(schema.field("v").type) == "double", f
+
+
+@pytest.mark.parametrize("dv", [True, False])
+def test_dml_condition_with_commented_parenthesis(spark, eng, dv):
+    """A comment inside a DELETE/UPDATE condition is no part of the
+    condition's parentheses: a '(' or ')' in it neither breaks nor moves
+    the cut of the WHERE text."""
+    df = spark.createDataFrame(
+        [(1, 1.0), (2, 2.0), (3, 3.0)], "id bigint, v double"
+    )
+    eng.create_table(
+        "cm", df, keys=["id"], versioned=True, deletion_vectors=dv
+    )
+    st = eng.sql(
+        "UPDATE cm SET v = -v /* ) */ WHERE id = 1 /* ( */ AND v > 0"
+    ).head()
+    assert st["n_affected"] == 1
+    st = eng.sql("DELETE FROM cm WHERE (id -- )\n) = 2 /* ( */ AND v > 0")
+    assert st.head()["n_affected"] == 1
+    assert {r.id: r.v for r in eng.table("cm").collect()} == {
+        1: -1.0, 3: 3.0,
+    }
 
 
 def test_delete_keys_dv_frame_keyed(spark, eng):

@@ -445,18 +445,6 @@ def test_split_top_level_roundtrip(parts):
     assert _split_top_level(", ".join(clauses)) == clauses
 
 
-@given(set_parts=st.lists(_expr, min_size=1, max_size=3), where=_expr)
-@settings(max_examples=60, deadline=None)
-def test_split_where_roundtrip(set_parts, where):
-    from polars_lake_spark.dml import _split_where
-
-    set_sql = ", ".join(f"c{i} = {p}" for i, p in enumerate(set_parts))
-    got_set, got_where = _split_where(f"{set_sql} WHERE {where}")
-    assert got_set == set_sql and got_where == where
-    got_set2, got_where2 = _split_where(set_sql)
-    assert got_set2 == set_sql and got_where2 is None
-
-
 def test_analyze_table_statement(eng):
     st = eng.sql("ANALYZE TABLE t COMPUTE STATISTICS FOR COLUMNS id, grp").head()
     assert (st["operation"], st["n_affected"]) == ("analyze", 20)
@@ -583,8 +571,7 @@ def test_alter_add_column_paren_typed(eng):
 
 def test_time_travel_pattern_inside_string_literal(eng, spark):
     """'... VERSION AS OF 1' INSIDE a string literal is data, not syntax
-    — the rewriter must leave it verbatim (r6 verdict item 3a; mirror of
-    test_update_where_inside_string_literal for _quoted_spans)."""
+    — the rewriter must leave it verbatim (r6 verdict item 3a)."""
     df = spark.createDataFrame([(1, "x")], "id bigint, s string")
     eng.create_table("ttl", df, keys=["id"], versioned=True)
     eng.sql("UPDATE ttl SET s = 'ttl VERSION AS OF 1' WHERE id = 1")
@@ -599,25 +586,6 @@ def test_time_travel_pattern_inside_string_literal(eng, spark):
         "WHERE s != 'ttl VERSION AS OF 99'"
     ).head()["n"]
     assert n == 1
-
-
-@given(s=st.lists(_atom, min_size=0, max_size=6).map(" ".join))
-@settings(max_examples=120, deadline=None)
-def test_quoted_spans_agrees_with_scan_top_level(s):
-    """_quoted_spans and _scan_top_level are separate implementations of
-    the same quote scanner; their notion of 'inside a string literal'
-    must never drift (r6 verdict item 3c).  _scan_top_level only yields
-    positions at paren depth 0, so compare on paren-free inputs: every
-    index is either yielded (top-level) or inside a quoted span, never
-    both, never neither."""
-    from polars_lake_spark.dml import _quoted_spans, _scan_top_level
-
-    s = s.replace("(", "<").replace(")", ">")  # paren-free, depth stays 0
-    yielded = {i for i, _ in _scan_top_level(s)}
-    spans = _quoted_spans(s)
-    for i in range(len(s)):
-        in_span = any(a <= i <= b for a, b in spans)
-        assert (i in yielded) == (not in_span), (s, i, spans)
 
 
 def test_alter_drop_column_statement(eng, spark):

@@ -11,44 +11,51 @@ from pyspark.sql import functions as F
 
 from polars_lake_spark import Engine
 from polars_lake_spark import zonemaps as Z
+from polars_lake_spark.sqltree import parse_expression
 
 
 # ----------------------------------------------------------- parser units
-def test_parse_conjuncts_shapes():
-    assert Z.parse_conjuncts("a = 5") == [("a", "=", 5)]
-    assert Z.parse_conjuncts("5 = a") == [("a", "=", 5)]
-    assert Z.parse_conjuncts("a < 5 AND b >= 'x'") == [
+@pytest.fixture()
+def pc(spark):
+    """parse_conjuncts over Spark's parse of a predicate string."""
+    return lambda pred: Z.parse_conjuncts(parse_expression(spark, pred))
+
+
+def test_parse_conjuncts_shapes(pc):
+    assert pc("a = 5") == [("a", "=", 5)]
+    assert pc("5 = a") == [("a", "=", 5)]
+    assert pc("a < 5 AND b >= 'x'") == [
         ("a", "<", 5),
         ("b", ">=", "x"),
     ]
-    assert Z.parse_conjuncts("10 > a") == [("a", "<", 10)]
-    assert Z.parse_conjuncts("a <> 3") == [("a", "!=", 3)]
-    assert Z.parse_conjuncts("a BETWEEN 1 AND 3 AND b = 2") == [
+    assert pc("10 > a") == [("a", "<", 10)]
+    assert pc("a <> 3") == [("a", "!=", 3)]
+    assert pc("a BETWEEN 1 AND 3 AND b = 2") == [
         ("a", "between", 1, 3),
         ("b", "=", 2),
     ]
-    assert Z.parse_conjuncts("a IN (1, 2, 3)") == [("a", "in", [1, 2, 3])]
-    assert Z.parse_conjuncts("a IS NULL AND b IS NOT NULL") == [
+    assert pc("a IN (1, 2, 3)") == [("a", "in", [1, 2, 3])]
+    assert pc("a IS NULL AND b IS NOT NULL") == [
         ("a", "isnull"),
         ("b", "notnull"),
     ]
     # unsupported conjuncts drop silently; supported ones survive
-    assert Z.parse_conjuncts("a % 7 = 3 AND b = 2") == [("b", "=", 2)]
-    assert Z.parse_conjuncts("lower(a) = 'x' AND b < 4") == [("b", "<", 4)]
+    assert pc("a % 7 = 3 AND b = 2") == [("b", "=", 2)]
+    assert pc("lower(a) = 'x' AND b < 4") == [("b", "<", 4)]
     # string literal containing AND must not split
-    assert Z.parse_conjuncts("a = 'x AND y'") == [("a", "=", "x AND y")]
+    assert pc("a = 'x AND y'") == [("a", "=", "x AND y")]
     # escaped quote inside the literal
-    assert Z.parse_conjuncts("a = 'it''s' AND b = 1") == [
+    assert pc("a = 'it''s' AND b = 1") == [
         ("a", "=", "it's"),
         ("b", "=", 1),
     ]
 
 
-def test_parse_conjuncts_or_disables_pruning():
-    assert Z.parse_conjuncts("a = 5 OR b = 2") == []
-    assert Z.parse_conjuncts("a = 5 AND (b = 2 OR c = 3)") == [("a", "=", 5)]
+def test_parse_conjuncts_or_disables_pruning(pc):
+    assert pc("a = 5 OR b = 2") == []
+    assert pc("a = 5 AND (b = 2 OR c = 3)") == [("a", "=", 5)]
     # an OR only inside a string literal is not an OR
-    assert Z.parse_conjuncts("a = 'x OR y'") == [("a", "=", "x OR y")]
+    assert pc("a = 'x OR y'") == [("a", "=", "x OR y")]
 
 
 def test_file_survives_ranges():
@@ -451,6 +458,60 @@ def test_sql_fast_path_qualified_and_clause_shapes(spark, eng):
     assert sorted(x.id for x in r) == [0, 1, 2, 3, 4]
     assert eng.sql("SELECT id FROM z WHERE id = 3 DISTRIBUTE BY id").head().id == 3
     assert eng.sql("SELECT id FROM z WHERE id = 3 CLUSTER BY id").head().id == 3
+
+
+def _escaped(spark, eng, name, **kw):
+    """ids 1..3 with s = A, x\\ (one backslash), B — one file per row,
+    so a wrongly read literal prunes the file that holds the match."""
+    df = spark.createDataFrame(
+        [(1, "A"), (2, "x\\"), (3, "B")], "id bigint, s string"
+    )
+    eng.create_table(
+        name, df.repartitionByRange(3, "id"), keys=["id"], versioned=True,
+        **kw,
+    )
+
+
+def test_sql_escaped_literal_prunes_with_sparks_value(spark, eng):
+    """Spark reads the SQL literal 'x\\\\' as x\\ (one backslash) and
+    '\\u0041' as A; the zone-map routes prune with Spark's reading of
+    the literal, never its spelling."""
+    _escaped(spark, eng, "esc")
+    q = "SELECT id FROM esc WHERE s = 'x\\\\'"
+    assert [r.id for r in eng.sql(q).collect()] == [2]
+    assert eng.last_scan_report["files_total"] == 3
+    q = "SELECT COUNT(*) FROM esc WHERE s = 'x\\\\'"
+    assert eng.sql(q).head()[0] == 1
+    q = "SELECT id FROM esc WHERE s = '\\u0041'"
+    assert [r.id for r in eng.sql(q).collect()] == [1]
+
+
+def _doubles(spark, eng, name, **kw):
+    """ids 1..3 with DOUBLE v = 0.1, 0.3, 0.1 — one file per row."""
+    df = spark.createDataFrame(
+        [(1, 0.1), (2, 0.3), (3, 0.1)], "id bigint, v double"
+    )
+    eng.create_table(
+        name, df.repartitionByRange(3, "id"), keys=["id"], versioned=True,
+        **kw,
+    )
+
+
+def test_sql_decimal_literal_on_double_prunes_as_double(spark, eng):
+    """Spark compares a DOUBLE column with the decimal literal 0.1 as
+    the double 0.1, which is not exactly 1/10: pruning and the
+    full-match COUNT must compare the same way, or the file whose
+    min = max = 0.1 is pruned and the one whose max = 0.3 is certified
+    all-matching for v < 0.3."""
+    _doubles(spark, eng, "dbl")
+    t = eng.table("dbl")
+    for pred, ids in [("v = 0.1", [1, 3]), ("v <= 0.1", [1, 3]),
+                      ("v < 0.3", [1, 3]), ("v >= 0.3", [2])]:
+        assert sorted(r.id for r in t.filter(pred).collect()) == ids
+        got = eng.sql(f"SELECT id FROM dbl WHERE {pred}").collect()
+        assert sorted(r.id for r in got) == ids, pred
+        n = eng.sql(f"SELECT COUNT(*) FROM dbl WHERE {pred}").head()[0]
+        assert n == len(ids), pred
 
 
 def test_sql_fast_path_drops_staging_views(spark, eng):
