@@ -1673,15 +1673,16 @@ class Engine:
 
         Spark's own parser reads each statement ONCE
         (:func:`polars_lake_spark.dml.parse_statement`; a time-travel
-        splice parses once more) and it routes by its tree: DELETE and
-        UPDATE run the engine's mutation paths, and a single-table SELECT
-        may answer from metadata (COUNT(*), partition-grouped or
-        partition-predicate COUNT, MIN/MAX) or through zone-map file
-        skipping.  MERGE, INSERT, CTAS, DDL and the engine-only
-        statements route by prefix regex in :mod:`polars_lake_spark.dml`:
-        Spark has no grammar for the engine-only ones, and the engine
-        forms of the rest add clauses Spark's plans do not carry.  DML
-        and engine statements return a one-row (operation, table,
+        splice parses once more) and it routes by its tree: DELETE,
+        UPDATE, INSERT INTO / OVERWRITE and MERGE run the engine's
+        mutation paths, and a single-table SELECT may answer from
+        metadata (COUNT(*), partition-grouped or partition-predicate
+        COUNT, MIN/MAX) or through zone-map file skipping.  CTAS /
+        CREATE TABLE, the DDL and the engine-only statements route by
+        prefix regex in :mod:`polars_lake_spark.dml`: Spark has no
+        grammar for the engine-only ones nor for ``CREATE VERSIONED
+        TABLE``, and the DDL regexes have not moved to the tree yet.
+        DML and engine statements return a one-row (operation, table,
         n_affected) status frame; everything else is vanilla Spark SQL."""
         from polars_lake_spark import dml
 
@@ -5492,8 +5493,8 @@ class Engine:
         self, spec: TableSpec, cols: set[str], verb: str, keys_ok: bool = False
     ) -> None:
         """Refuse column DDL that would break physical layout or recorded
-        semantics (same contract as the unversioned rewrite path):
-        partition/bucket columns name directories, keys define row
+        semantics, on the metadata-only path and the unversioned rewrite
+        path alike: partition/bucket columns name directories, keys define row
         identity (renames may carry them, `keys_ok`), and CHECK
         constraints / expectations / generated-column formulas hold SQL
         text that would dangle."""

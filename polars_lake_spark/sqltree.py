@@ -123,12 +123,14 @@ def _comments(sql: str) -> tuple:
     )
 
 
-def text(sql: str, node) -> str:
+def text(sql: str, node, subs=()) -> str:
     """The source text of ``node``.  A postfix operator's origin starts
     at the operator (``IS NULL``, ``IN (...)``) and a parenthesised
     operand's excludes its parentheses, so this takes the subtree's span
     and widens it over any parenthesis left open (leaf text — literals,
-    quoted names — and comments are not counted)."""
+    quoted names — and comments are not counted).  ``subs`` holds
+    disjoint ``(start, stop, new)`` spans inside it, each replaced by
+    ``new`` in one pass."""
     spans = _spans(node, [])
     if not spans:  # a bare TRUE/FALSE
         return node.sql()
@@ -146,7 +148,11 @@ def text(sql: str, node) -> str:
         a = masked.rindex("(", 0, a)
     for _ in range(depth - low):
         b = masked.index(")", b + 1)
-    return sql[a : b + 1]
+    out = []
+    for lo, hi, new in sorted(subs):
+        out += [sql[a:lo], new]
+        a = hi + 1
+    return "".join(out) + sql[a : b + 1]
 
 
 def conjuncts(expr) -> list:

@@ -493,3 +493,28 @@ def test_optimize_purges_dropped_column_bytes(spark, tmp_path):
     assert "payload" not in physical_cols()  # OPTIMIZE + VACUUM purged
     assert eng.table("t").columns == ["id", "v"]
     assert eng.table("t").count() == 100
+
+
+@pytest.mark.parametrize("versioned", [True, False])
+def test_sql_column_ddl_guard_same_on_both_paths(spark, tmp_path, versioned):
+    """The metadata-only (versioned) and rewrite (unversioned) ALTER
+    paths make one decision: a column named only inside a constraint's
+    string literal may drop; a column an expectation reads may neither
+    drop nor rename, and the refusal is a ValueError before any write."""
+    eng = Engine(spark, str(tmp_path / "wh"))
+    df = spark.createDataFrame(
+        [(1, "a", 1.0, 2.0)], "id bigint, s string, val double, w double"
+    )
+    eng.create_table("cg", df, keys=["id"], versioned=versioned)
+    eng.add_constraint("cg", "not_val", "s <> 'val'")
+    eng.sql("ALTER TABLE cg DROP COLUMN val").collect()
+    assert eng.table("cg").columns == ["id", "s", "w"]
+    eng.add_expectation("cg", "pos_w", "w >= 0")
+    with pytest.raises(ValueError, match="expectation 'pos_w'"):
+        eng.sql("ALTER TABLE cg DROP COLUMN w")
+    with pytest.raises(ValueError, match="expectation 'pos_w'"):
+        eng.sql("ALTER TABLE cg RENAME COLUMN w TO w2")
+    assert eng.table("cg").columns == ["id", "s", "w"]
+    assert eng.table("cg").collect()[0].asDict() == {
+        "id": 1, "s": "a", "w": 2.0,
+    }

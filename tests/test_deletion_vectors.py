@@ -570,6 +570,29 @@ def test_dv_dml_escaped_literal(spark, eng):
     }
 
 
+def test_dv_merge_target_named_like_the_source_alias(spark, eng):
+    """SQL MERGE into a DV table named ``n`` (merge_into's own source
+    alias): ``SET v = s.v`` takes the source values."""
+    eng.create_table(
+        "n",
+        spark.createDataFrame(
+            [(1, 10.0), (2, 20.0), (3, 30.0)], "id bigint, v double"
+        ),
+        keys=["id"], versioned=True, deletion_vectors=True,
+    )
+    spark.createDataFrame(
+        [(1, 5.0), (2, 7.0)], "id bigint, v double"
+    ).createOrReplaceTempView("n_src")
+    st = eng.sql(
+        "MERGE INTO n USING n_src AS s ON n.id = s.id "
+        "WHEN MATCHED THEN UPDATE SET v = s.v"
+    ).head()
+    assert st["n_affected"] == 2
+    assert {r.id: r.v for r in eng.table("n").collect()} == {
+        1: 5.0, 2: 7.0, 3: 30.0,
+    }
+
+
 def test_dv_dml_decimal_literal_on_double(spark, eng, tmp_path):
     """The DV ref scan prunes a DOUBLE column against the decimal
     literal 0.1 as Spark compares it — as the double 0.1 — so the files

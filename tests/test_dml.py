@@ -2,6 +2,7 @@
 through the engine's mutation paths."""
 
 import pytest
+from pyspark.errors import ParseException
 from pyspark.sql import functions as F
 
 from polars_lake_spark import Engine
@@ -277,6 +278,16 @@ def test_delete_update_nondeterministic_predicate_consistent(eng):
     assert eng.table("t").count() == 20 - st2["n_affected"]
 
 
+def _parse_refused(eng, name, sql, condition):
+    """Spark's parser refuses ``sql`` with ``condition`` before the
+    engine runs anything: table ``name`` is unchanged."""
+    before = sorted(eng.table(name).collect(), key=str)
+    with pytest.raises(ParseException) as exc:
+        eng.sql(sql)
+    assert exc.value.getCondition() == condition
+    assert sorted(eng.table(name).collect(), key=str) == before
+
+
 def test_merge_explicit_update_set(eng, spark):
     """Explicit-column UPDATE SET (formerly rejected): matched rows take
     exactly the assignments — unassigned columns keep OLD values — and
@@ -306,13 +317,16 @@ def test_merge_explicit_update_set(eng, spark):
             "WHEN MATCHED THEN UPDATE SET nope = 1"
         )
     # multiple WHEN MATCHED clauses are ordered first-match-wins, so an
-    # UNconditioned clause anywhere but last makes the rest dead — refuse
-    with pytest.raises(ValueError, match="only the last may omit"):
-        eng.sql(
-            "MERGE INTO mr USING mr_src ON mr.id = mr_src.id "
-            "WHEN MATCHED THEN UPDATE SET v = 1 "
-            "WHEN MATCHED THEN UPDATE SET *"
-        )
+    # UNconditioned clause anywhere but last makes the rest dead — Spark's
+    # parser refuses it
+    _parse_refused(
+        eng,
+        "mr",
+        "MERGE INTO mr USING mr_src ON mr.id = mr_src.id "
+        "WHEN MATCHED THEN UPDATE SET v = 1 "
+        "WHEN MATCHED THEN UPDATE SET *",
+        "NON_LAST_MATCHED_CLAUSE_OMIT_CONDITION",
+    )
 
 
 def test_merge_not_matched_by_source_delete(eng, spark):
@@ -423,26 +437,99 @@ def test_drop_table_statement_is_durable(spark, tmp_path):
     assert "d" not in e2.tables()
 
 
-# ---- parser property tests (hypothesis): the splitters must recover
-# the exact parts they were built from, whatever quoting/nesting the
-# expressions contain ------------------------------------------------
-from hypothesis import given, settings
-from hypothesis import strategies as st
+# ---- MERGE reads its clauses from Spark's parse tree: literals,
+# comments, nested calls and quoted names never move a clause boundary
+def test_merge_set_list_literal_commas_calls_and_case(eng, spark):
+    """One SET list holding a comma inside a literal, a nested call, an
+    escaped quote and a CASE expression: every column takes exactly its
+    own value."""
+    spark.createDataFrame(
+        [(1, 5.0)], "id bigint, v double"
+    ).createOrReplaceTempView("sl_src")
+    df = spark.createDataFrame(
+        [(1, 0.0, "x", "x", "x")],
+        "id bigint, v double, a string, b string, c string",
+    )
+    eng.create_table("sl", df, keys=["id"])
+    eng.sql(
+        "MERGE INTO sl USING sl_src AS s ON sl.id = s.id "
+        "WHEN MATCHED THEN UPDATE SET a = 'a,b', "
+        "v = greatest(s.v, pow(2, 3)), b = 'it\\'s', "
+        "c = CASE WHEN s.v > 1 THEN 'big, s.v' ELSE 'small' END"
+    )
+    assert eng.table("sl").collect()[0].asDict() == {
+        "id": 1, "v": 8.0, "a": "a,b", "b": "it's", "c": "big, s.v",
+    }
 
-_atom = st.one_of(
-    st.sampled_from(["a", "f(1, 2)", "x + 1", "(1, 2)", "g(h(3), 4)"]),
-    st.sampled_from(["'lit'", "'a,b'", "'x where y'", "'it\\'s'", "'(('"]),
-)
-_expr = st.lists(_atom, min_size=1, max_size=3).map(" ".join)
+
+def _merge_target(eng, spark, name, src):
+    spark.createDataFrame(
+        [(1, 5.0), (2, 7.0)], "id bigint, v double"
+    ).createOrReplaceTempView(src)
+    df = spark.createDataFrame(
+        [(1, 10.0, "x"), (2, 20.0, "y"), (3, 30.0, "z")],
+        "id bigint, v double, note string",
+    )
+    eng.create_table(name, df, keys=["id"])
 
 
-@given(parts=st.lists(_expr, min_size=1, max_size=4))
-@settings(max_examples=60, deadline=None)
-def test_split_top_level_roundtrip(parts):
-    from polars_lake_spark.dml import _split_top_level
+def test_merge_target_named_like_the_source_alias(eng, spark):
+    """A target table named ``n`` (merge_into's own source alias): the
+    source alias ``s`` must not be rewritten into the target's."""
+    _merge_target(eng, spark, "n", "n_src")
+    st = eng.sql(
+        "MERGE INTO n USING n_src AS s ON n.id = s.id "
+        "WHEN MATCHED THEN UPDATE SET v = s.v"
+    ).head()
+    assert st["n_affected"] == 2
+    got = {r.id: r.v for r in eng.table("n").collect()}
+    assert got == {1: 5.0, 2: 7.0, 3: 30.0}
 
-    clauses = [f"c{i} = {p}" for i, p in enumerate(parts)]
-    assert _split_top_level(", ".join(clauses)) == clauses
+
+def test_merge_clause_keyword_inside_string_literal(eng, spark):
+    _merge_target(eng, spark, "kw", "kw_src")
+    eng.sql(
+        "MERGE INTO kw USING kw_src AS s ON kw.id = s.id "
+        "WHEN MATCHED THEN UPDATE SET note = 'a WHEN MATCHED b' "
+        "WHEN NOT MATCHED THEN INSERT *"
+    )
+    got = {r.id: r.note for r in eng.table("kw").collect()}
+    assert got == {1: "a WHEN MATCHED b", 2: "a WHEN MATCHED b", 3: "z"}
+
+
+def test_merge_with_comments(eng, spark):
+    """A ``--`` comment after ON and a ``/* */`` comment between WHEN and
+    THEN are Spark's comments, not clause text."""
+    _merge_target(eng, spark, "cm", "cm_src")
+    eng.sql(
+        "MERGE INTO cm USING cm_src AS s ON cm.id = s.id -- the key\n"
+        "WHEN MATCHED AND s.v > 6 /* only id 2 */ THEN UPDATE SET v = s.v "
+        "WHEN MATCHED /* the rest */ THEN DELETE"
+    )
+    got = {r.id: r.v for r in eng.table("cm").collect()}
+    assert got == {2: 7.0, 3: 30.0}
+
+
+def test_merge_aliased_target(eng, spark):
+    """``MERGE INTO t AS x``: the target alias reads the target row."""
+    _merge_target(eng, spark, "ta", "ta_src")
+    st = eng.sql(
+        "MERGE INTO ta AS x USING ta_src AS s ON x.id = s.id "
+        "WHEN MATCHED AND x.v < 15 THEN UPDATE SET v = s.v + x.v"
+    ).head()
+    assert st["operation"] == "merge"
+    got = {r.id: r.v for r in eng.table("ta").collect()}
+    assert got == {1: 15.0, 2: 20.0, 3: 30.0}
+
+
+def test_merge_backticked_source_alias(eng, spark):
+    _merge_target(eng, spark, "bq", "bq_src")
+    eng.sql(
+        "MERGE INTO bq USING bq_src AS `s` ON bq.id = `s`.id "
+        "WHEN MATCHED THEN UPDATE SET v = `s`.`v` * 2, note = bq.note || 'q'"
+    )
+    got = {r.id: (r.v, r.note) for r in eng.table("bq").collect()}
+    assert got == {1: (10.0, "xq"), 2: (14.0, "yq"), 3: (30.0, "z")}
 
 
 def test_analyze_table_statement(eng):
@@ -2111,19 +2198,23 @@ def test_merge_not_matched_insert_values_and_conditions(eng, spark):
     )
     row = eng.table("ni").filter("id = 102").head()
     assert row is not None and row.val is None
-    # length-mismatched VALUES raises
-    with pytest.raises(ValueError, match="differ in length"):
-        eng.sql(
-            "MERGE INTO ni USING ni_src AS s ON ni.id = s.id "
-            "WHEN NOT MATCHED THEN INSERT (id, val) VALUES (s.id)"
-        )
+    # length-mismatched VALUES: Spark's parser refuses it
+    _parse_refused(
+        eng,
+        "ni",
+        "MERGE INTO ni USING ni_src AS s ON ni.id = s.id "
+        "WHEN NOT MATCHED THEN INSERT (id, val) VALUES (s.id)",
+        "_LEGACY_ERROR_TEMP_0006",
+    )
     # only the last NOT MATCHED clause may omit its condition
-    with pytest.raises(ValueError, match="only the last may omit"):
-        eng.sql(
-            "MERGE INTO ni USING ni_src AS s ON ni.id = s.id "
-            "WHEN NOT MATCHED THEN INSERT * "
-            "WHEN NOT MATCHED AND s.v < 0 THEN INSERT *"
-        )
+    _parse_refused(
+        eng,
+        "ni",
+        "MERGE INTO ni USING ni_src AS s ON ni.id = s.id "
+        "WHEN NOT MATCHED THEN INSERT * "
+        "WHEN NOT MATCHED AND s.v < 0 THEN INSERT *",
+        "NON_LAST_NOT_MATCHED_BY_TARGET_CLAUSE_OMIT_CONDITION",
+    )
 
 
 def test_merge_by_source_update(eng, spark):
@@ -2148,12 +2239,14 @@ def test_merge_by_source_update(eng, spark):
     assert got[1] == (1.0, "a")           # matched: updated
     assert got[2] == (20.0, "stale")      # target-only: 2nd clause
     assert 3 not in got                   # target-only: 1st clause (del)
-    # SET * on a BY SOURCE clause is refused (no source row)
-    with pytest.raises(ValueError, match="no source row|no SET"):
-        eng.sql(
-            "MERGE INTO bsu USING bsu_src AS s ON bsu.id = s.id "
-            "WHEN NOT MATCHED BY SOURCE THEN UPDATE SET *"
-        )
+    # SET * on a BY SOURCE clause (no source row) is no Spark grammar
+    _parse_refused(
+        eng,
+        "bsu",
+        "MERGE INTO bsu USING bsu_src AS s ON bsu.id = s.id "
+        "WHEN NOT MATCHED BY SOURCE THEN UPDATE SET *",
+        "PARSE_SYNTAX_ERROR",
+    )
 
 
 def test_merge_full_clause_set_deletion_vectors(eng, spark):
