@@ -595,6 +595,15 @@ def _merge(engine, query: str, plan) -> DataFrame | None:
     sides = {q.lower(): "n" for q in (salias, src_name) if q}
     sides.update({q.lower(): "o" for q in (written, name, talias) if q})
 
+    def column(key) -> str:
+        """A SET / INSERT column, with leading name parts that spell the
+        target dropped (Delta's ``UPDATE SET t.v = s.v``)."""
+        parts = sqltree.seq(key.nameParts())
+        for i in range(len(parts) - 1, 0, -1):
+            if sides.get(".".join(parts[:i]).lower()) == "o":
+                return ".".join(parts[i:])
+        return ".".join(parts)
+
     def clauses(actions) -> list[dict]:
         """One ordered clause family (first match wins, Delta): DELETE,
         UPDATE SET * / INSERT * (no assignments) or explicit ones."""
@@ -606,7 +615,7 @@ def _merge(engine, query: str, plan) -> DataFrame | None:
             if k in ("UpdateAction", "InsertAction"):
                 assigns = {}
                 for a in sqltree.seq(action.assignments()):
-                    assigns[sqltree.name(a.key())] = F.expr(
+                    assigns[column(a.key())] = F.expr(
                         _merge_text(query, a.value(), sides)
                     )
             out.append(

@@ -54,6 +54,7 @@ from polars_lake_spark.layout import (
 )
 from polars_lake_spark.operators import merge as M
 from polars_lake_spark.session import configure_session
+from polars_lake_spark.snapshots import record_dir_schema
 
 # Leading underscore: Spark's file index treats "_"-prefixed files as
 # metadata (like _SUCCESS) and skips them when scanning the table dir.
@@ -768,6 +769,7 @@ class Engine:
         if parts:
             writer = writer.partitionBy(*parts)
         self._parquet_options(writer, spec).parquet(wpath)
+        record_dir_schema(wpath)
         if spec.zone_maps:
             # Fold the new files' footer stats into the dir's zone-map
             # sidecar BEFORE the commit publishes it (the dir is
@@ -1074,16 +1076,21 @@ class Engine:
         name: str,
         conj: list,
         version: int | None = None,
+        *,
+        with_row_refs: bool = False,
+        snap=None,
     ) -> DataFrame:
         """Zone-map-pruned UNfiltered read from PRE-PARSED conjuncts
         (zonemaps.parse_conjuncts tuples) — the layer below
         ``scan_where`` for callers that already hold exact literal
         values a SQL round-trip could distort (the CDC watermark probes
-        bound the scan by batch-key min/max, where e.g. a Decimal key
-        printed as a float literal could prune a file that still holds
-        the key).  Same contract: the caller re-applies its own exact
-        filter/join; pruning only drops files whose recorded ranges
-        PROVE no row can match every conjunct."""
+        and keyed DV deletes bound the scan by their key set, where e.g.
+        a Decimal key printed as a float literal could prune a file that
+        still holds the key).  Same contract: the caller re-applies its
+        own exact filter/join; pruning only drops files whose recorded
+        ranges PROVE no row can match every conjunct.
+        ``with_row_refs``/``snap`` pass through to ``SnapshotStore.read``
+        (a DV writer reads the snapshot it commits against, with refs)."""
         if name not in self.specs and name not in self._mem:
             self.load_table(name)
         spec = self.specs.get(name)
@@ -1097,6 +1104,8 @@ class Engine:
             version,
             prune=conj or None,
             report=report,
+            with_row_refs=with_row_refs,
+            snap=snap,
         )
 
     def count_where(
@@ -3206,30 +3215,13 @@ class Engine:
 
         ``deletion_vectors`` tables take the merge-on-read path instead:
         the matched rows' physical refs commit as an O(matched) sidecar
-        and NO data file is rewritten (delete_where_dv, with the key
-        match as the predicate source)."""
+        and NO data file is rewritten (:meth:`delete_keys_dv`)."""
         spec = self._guard_mutable(name)
         keys = list(keys or spec.keys)
         if not keys:
             raise ValueError(f"no delete keys for table {name}")
         if spec.deletion_vectors:
-            from polars_lake_spark.snapshots import DV_FILE_COL, DV_POS_COL
-
-            with self._lock(name):
-                store = self._snapstore(name)
-                base = store.load()
-                live = store.read(self.spark, with_row_refs=True)
-                refs = M.ns_join(
-                    live,
-                    deletes.select(*keys).distinct(),
-                    keys,
-                    "left_semi",
-                    broadcast_right=True,
-                ).select(
-                    F.col(DV_FILE_COL).alias("file_path"),
-                    F.col(DV_POS_COL).alias("row_index"),
-                )
-                self._commit_dv_refs(name, store, base, refs)
+            self.delete_keys_dv(name, deletes, keys)
             return
         with self._lock(name):
             t = self.table(name)
@@ -3322,12 +3314,15 @@ class Engine:
         remove EVERY row whose key tuple appears in ``keys_df`` — the
         change-feed-maintenance shape (a CDC batch hands you doomed ids
         as a FRAME, not a literal predicate, and an IN-list of 100k ids
-        is no predicate at all).  The table scans map-side against the
-        BROADCAST key frame (left-semi — bounded by the batch), the
-        matched rows' physical refs go into an O(matched) sidecar, and
-        untouched files are never rewritten.  Unlike :meth:`delete`
-        (key-based rewrite), matching every row sharing a key is the
-        POINT here — an index table holds many rows per doc id.
+        is no predicate at all).  The table scan is key-range-pruned
+        through the zone maps (``zonemaps.batch_key_conjuncts``) and
+        semi-joins map-side against the BROADCAST key frame (bounded by
+        the batch), the matched rows' physical refs go into an
+        O(matched) sidecar, and untouched files are never rewritten
+        (the scan's files_total/files_kept land in
+        ``last_scan_report``).  Unlike :meth:`delete` (key-based
+        rewrite), matching every row sharing a key is the POINT here —
+        an index table holds many rows per doc id.
         Returns rows deleted; zero matches commit nothing."""
         spec = self._guard_mutable(name)
         if not (spec.versioned and spec.deletion_vectors):
@@ -3336,12 +3331,18 @@ class Engine:
                 "use delete() (key-based rewrite)"
             )
         from polars_lake_spark.snapshots import DV_FILE_COL, DV_POS_COL
+        from polars_lake_spark.zonemaps import batch_key_conjuncts
 
-        keys = keys_df.select(*key_cols).distinct()
+        # pinned: the key set bounds the scan (zone-map conjuncts) and
+        # then semi-joins it, and must be the same rows both times
+        keys = keys_df.select(*key_cols).distinct().localCheckpoint(eager=True)
+        conj = batch_key_conjuncts(keys, key_cols)
         with self._lock(name):
             store = self._snapstore(name)
             base = store.load()
-            live = store.read(self.spark, with_row_refs=True)
+            live = self._scan_conjuncts(
+                name, conj, with_row_refs=True, snap=base
+            )
             refs = M.ns_join(
                 live, keys, key_cols, "left_semi", broadcast_right=True
             ).select(
@@ -3361,6 +3362,9 @@ class Engine:
         nm_clauses: list[dict],
         bs_clauses: list[dict],
         null_clobbers: bool,
+        base=None,
+        live: DataFrame | None = None,
+        judged: bool = False,
     ) -> None:
         """MERGE INTO for deletion-vector tables, merge-on-read: one
         RIGHT-outer join of the DV-applied target against the source
@@ -3384,17 +3388,26 @@ class Engine:
         anti-join against the source finds them, the first firing
         clause refs the old copy out — and, for UPDATE, re-appends the
         assigned values — O(target-only matches) refs, still zero
-        rewrite."""
+        rewrite.
+
+        ``base``/``live`` (the fused CDC apply): the snapshot to commit
+        against and the rows of it, with refs, that the source's keys
+        can match — every target row the join could pair, so the merge
+        reads nothing else (refused with ``bs_clauses``, which need
+        every target row).  ``judged``: the caller already ran the
+        expectations over the source rows they govern."""
         from polars_lake_spark.snapshots import (
             DV_FILE_COL,
             DV_POS_COL,
             carried_meta,
         )
 
+        assert live is None or not bs_clauses
         with self._lock(name):
             store = self._snapstore(name)
-            base = store.load()
-            live = store.read(self.spark, with_row_refs=True)
+            if base is None:
+                base = store.load()
+                live = store.read(self.spark, with_row_refs=True, snap=base)
             new = self._with_layout(source, spec)
             old_cols = [
                 c for c in live.columns if c not in (DV_FILE_COL, DV_POS_COL)
@@ -3423,9 +3436,10 @@ class Engine:
             pre_keys = None
             if bs_clauses and spec.expectations:
                 pre_keys = new.select(*keys)
-            new = self._apply_expectations(
-                spec, new, full_schema=live.select(*old_cols).schema
-            )
+            if not judged:
+                new = self._apply_expectations(
+                    spec, new, full_schema=live.select(*old_cols).schema
+                )
             new_cols = set(new.columns)
             o, n = live.alias("o"), new.alias("n")
             joined = o.join(
@@ -3626,6 +3640,11 @@ class Engine:
                     },
                 )
             if n_app:
+                # provided identity values advance the high-water marks,
+                # as on the rewrite path
+                ident = self._identity_bump_meta(spec, source)
+                if ident:
+                    meta = {**(meta or {}), **ident}
                 self._write_versioned(appends, spec, op="append", meta=meta)
             else:
                 store.commit(

@@ -36,7 +36,14 @@ partitions) JSON, no data movement.  Reads are explicit file-list scans
 (one union branch per write dir, each with its own basePath so partition
 values parse), which at scale is *cheaper* than directory discovery: no
 recursive listing storms on object stores, and partition pruning works on
-the explicit paths.  Commits are atomic via temp-file + ``os.rename``.
+the explicit paths.  Planning a read launches no Spark job: each write dir
+records its Spark schema (``_schema.json``, copied from its footers before
+the commit publishes the dir) and every deletion-vector sidecar has one
+fixed schema, so no branch infers a schema from footers — only dirs
+without a recorded schema (written before it was recorded, or files
+adopted by ``convert_to_versioned``) still do, one job each.  Partition
+columns still come from the paths.  Commits are atomic via temp-file +
+``os.rename``.
 
 The reference has no versioning at all (its manifest is a single mutable
 spec, ``/root/reference/src/dataset.rs:337-358``); this is the
@@ -69,6 +76,12 @@ DV_POS_COL = "__dv_pos"
 # AQE pick the join strategy instead. The commit side counts refs into
 # meta["dv_rows"] so this decision is metadata-only at read time.
 DV_BROADCAST_MAX_ROWS = 5_000_000
+# A write dir's recorded data schema (record_dir_schema), and the footer
+# key Spark stores its row schema under.
+DIR_SCHEMA = "_schema.json"
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+# The fixed shape of a deletion-vector sidecar.
+DV_SCHEMA = "file_path string, row_index long"
 
 # Immutable write-dir name (clone mappings prefix a relative path; the
 # basename still carries the counter that orders the dir against schema
@@ -214,6 +227,39 @@ def _partition_relpaths(write_dir: str) -> list[str]:
         if any(f.endswith(".parquet") for f in files):
             found.add(os.path.relpath(cur, write_dir).replace(os.sep, "/"))
     return sorted("" if p == "." else p for p in found)
+
+
+def record_dir_schema(write_dir: str) -> None:
+    """Record a fresh write dir's Spark schema (its non-partition data
+    columns, exactly as the parquet footers carry it) in
+    ``DIR_SCHEMA``, so reads pin it instead of launching a footer-
+    inference job.  Call before the commit publishes the dir.  A dir
+    without parquet files or a Spark schema in its footer records
+    nothing and keeps inference."""
+    import pyarrow.parquet as pq
+
+    for cur, _dirs, files in os.walk(write_dir):
+        for f in sorted(files):
+            if f.endswith(".parquet"):
+                kv = pq.read_metadata(os.path.join(cur, f)).metadata or {}
+                schema = kv.get(SPARK_SCHEMA_KEY)
+                if schema is not None:
+                    tmp = os.path.join(write_dir, f".{DIR_SCHEMA}.tmp")
+                    with open(tmp, "wb") as fh:
+                        fh.write(schema)
+                    os.replace(tmp, os.path.join(write_dir, DIR_SCHEMA))
+                return
+
+
+def _dir_schema(write_dir: str):
+    """The schema ``record_dir_schema`` left in a write dir, or None."""
+    path = os.path.join(write_dir, DIR_SCHEMA)
+    if not os.path.isfile(path):
+        return None
+    from pyspark.sql.types import StructType
+
+    with open(path) as f:
+        return StructType.fromJson(json.load(f))
 
 
 def carried_meta(base_meta: dict | None, meta: dict | None = None) -> dict | None:
@@ -585,6 +631,8 @@ class SnapshotStore:
         partition values parse), unioned by name with missing columns
         allowed — write dirs from before a schema evolution contribute
         NULLs for later columns, exactly like the unversioned read path.
+        A dir's recorded schema (``record_dir_schema``) is pinned on its
+        scan, so planning needs no footer-inference job.
 
         ``prune`` (parsed zone-map conjuncts, see zonemaps.py) enables
         FILE-level data skipping: write dirs carrying a ``_zonemap.json``
@@ -723,14 +771,21 @@ class SnapshotStore:
                         continue  # whole write dir skipped
                     if count_full is None and len(kept_files) == len(cand):
                         kept_files = None  # nothing pruned: dir scan
+            reader = spark.read
+            schema = _dir_schema(base)
+            if schema is not None:
+                # recorded at write: no footer-inference job (partition
+                # columns still come from the paths; the union's
+                # pin_partition_types below fixes any type drift)
+                reader = reader.schema(schema)
             if kept_files is not None:
-                scan = spark.read.option("basePath", base).parquet(
+                scan = reader.option("basePath", base).parquet(
                     *[os.path.join(base, rel) for rel in kept_files]
                 )
             elif ppaths == [""]:
-                scan = spark.read.parquet(base)
+                scan = reader.parquet(base)
             else:
-                scan = spark.read.option("basePath", base).parquet(
+                scan = reader.option("basePath", base).parquet(
                     *[os.path.join(base, p) for p in ppaths]
                 )
             if events:
@@ -789,14 +844,10 @@ class SnapshotStore:
         return out
 
     def dv_scan(self, spark: SparkSession, dv_dirs: list[str]) -> DataFrame:
-        """The union of deletion-vector sidecar dirs: one row per deleted
-        physical row, columns (file_path, row_index)."""
-        return reduce(
-            lambda a, b: a.unionByName(b),
-            [
-                spark.read.parquet(os.path.join(self.data_path, d))
-                for d in dv_dirs
-            ],
+        """The deletion-vector sidecar dirs as one schema-pinned scan: one
+        row per deleted physical row, columns (file_path, row_index)."""
+        return spark.read.schema(DV_SCHEMA).parquet(
+            *[os.path.join(self.data_path, d) for d in dv_dirs]
         )
 
     # ----------------------------------------------------------- maintenance

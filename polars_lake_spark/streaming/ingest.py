@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from polars_lake_spark.operators.merge import ns_join
+from polars_lake_spark.zonemaps import batch_key_conjuncts
 
 # The reference's buffer threshold (/root/reference/src/server.rs:55).
 DEFAULT_FLUSH_ROWS = 10_000_000
@@ -301,101 +302,9 @@ def stream_bm25_ingest(
     return writer.start()
 
 
-def _zm_probe_literal(v):
-    """Map a collected batch-key endpoint into the zone-map comparison
-    domain (zonemaps._coerce) EXACTLY: Decimal/date/datetime travel as
-    their lossless string forms, a NaN float endpoint disqualifies its
-    column (NaN poisons every range comparison — conservative: that
-    column just prunes nothing), and an unmapped type contributes no
-    conjunct."""
-    import datetime as _dt
-    from decimal import Decimal
-
-    if v is None:
-        return None
-    if isinstance(v, bool):
-        return bool(v)
-    if isinstance(v, int):
-        return v
-    if isinstance(v, float):
-        return None if v != v else v
-    if isinstance(v, str):
-        return v
-    if isinstance(v, Decimal):
-        return str(v)
-    if isinstance(v, (_dt.datetime, _dt.date)):
-        return v.isoformat()
-    return None
-
-
-def _batch_key_conjuncts(
-    bkeys: DataFrame, keys: list[str], in_cap: int = 64
-) -> list[tuple]:
-    """Per-key-column conjuncts bounding the batch's key set, used to
-    key-range-prune the CDC watermark probes: any target file that can
-    hold a batch key satisfies every conjunct, so a pruned file provably
-    holds NO batch key and contributes nothing to the key-equality
-    semi/inner joins downstream.
-
-    Small batches (<= ``in_cap`` distinct key tuples — the common CDC
-    trigger shape) emit exact per-column IN lists: a batch touching
-    keys {5, 9_000_000} would prune NOTHING under a min/max bounding
-    box on a clustered target, but under IN only the files whose range
-    covers 5 or 9M survive.  Larger batches fall back to one min/max
-    aggregate per key column (BETWEEN conjuncts — one tiny job, no
-    driver-side key list)."""
-    head = bkeys.limit(in_cap + 1).collect()
-    conj = []
-    if len(head) <= in_cap:
-        for k in keys:
-            # Poison rule (mirrors the BETWEEN path): a batch key that
-            # the stats layer cannot bound disqualifies the whole
-            # column's conjunct.  That covers a NON-NULL key
-            # _zm_probe_literal cannot map (NaN float, exotic type —
-            # Spark's join equality DOES match NaN=NaN, but
-            # spec-compliant foreign-written stats ignore NaN) AND a
-            # NULL key: the downstream probe joins are NULL-SAFE (the
-            # engine's key identity — NULL matches NULL), while min/max
-            # and IN-list stats ignore NULLs, so an `IN (rest)` list
-            # could prune the very file holding the NULL-keyed rows and
-            # the stale filter would miss their watermark (r14).
-            lits, poisoned = set(), False
-            for r in head:
-                raw = r[k]
-                if raw is None:
-                    poisoned = True
-                    break
-                v = _zm_probe_literal(raw)
-                if v is None:
-                    poisoned = True
-                    break
-                lits.add(v)
-            if lits and not poisoned:
-                conj.append((k.lower(), "in", sorted(lits, key=str)))
-        return conj
-    row = bkeys.agg(
-        *[
-            a
-            for k in keys
-            for a in (
-                F.min(F.col(k)),
-                F.max(F.col(k)),
-                # NULL keys are invisible to min/max but DO match in the
-                # null-safe probe joins — any NULL poisons the conjunct
-                F.max(F.col(k).isNull()),
-            )
-        ]
-    ).head()
-    for i, k in enumerate(keys):
-        lo = _zm_probe_literal(row[3 * i])
-        hi = _zm_probe_literal(row[3 * i + 1])
-        has_null = bool(row[3 * i + 2])
-        if lo is not None and hi is not None and not has_null:
-            conj.append((k.lower(), "between", lo, hi))
-    return conj
-
-
-def _probe_scan(engine, table: str, conj: list[tuple]) -> DataFrame:
+def _probe_scan(
+    engine, table: str, conj: list[tuple], *, with_row_refs=False, snap=None
+) -> DataFrame:
     """Key-range-pruned target read for the CDC watermark probes.
 
     The probes were already O(batch) rows MOVED (map-side semi against
@@ -408,16 +317,21 @@ def _probe_scan(engine, table: str, conj: list[tuple]) -> DataFrame:
     overlapping the batch's key range) instead of O(table).
 
     Correctness never depends on the pruning (a dropped file provably
-    holds no batch key — see _batch_key_conjuncts); unversioned /
+    holds no batch key — see batch_key_conjuncts); unversioned /
     in-memory / zone-map-less tables and empty conjunct lists fall back
     to the plain scan.  Each pruned probe's files_total/files_kept
     report lands in ``engine.last_scan_report`` and — when a caller
     primes ``engine.cdc_probe_reports = []`` — accumulates there for
-    observability/plan gates."""
+    observability/plan gates.  ``with_row_refs``/``snap`` (versioned
+    targets): read that snapshot, keeping each row's DV refs."""
     spec = engine.specs.get(table)
-    if not conj or table in engine._mem or spec is None or not spec.versioned:
+    if table in engine._mem or spec is None or not spec.versioned:
         return engine.table(table)
-    df = engine._scan_conjuncts(table, conj)
+    if not conj and not with_row_refs:
+        return engine.table(table)
+    df = engine._scan_conjuncts(
+        table, conj, with_row_refs=with_row_refs, snap=snap
+    )
     reports = getattr(engine, "cdc_probe_reports", None)
     if reports is not None:
         report = dict(engine.last_scan_report)
@@ -574,6 +488,8 @@ def _drop_stale_changes(
     keys: list[str],
     floor=None,
     is_del=None,
+    keyset: tuple | None = None,
+    tgt: DataFrame | None = None,
 ) -> DataFrame:
     """The cross-batch stale filter for :func:`stream_apply_changes`:
     drop batch rows whose ``__seq`` is strictly below the key's applied
@@ -592,23 +508,27 @@ def _drop_stale_changes(
     the target itself never shuffles; both scans are additionally
     KEY-RANGE-PRUNED via the zone-map sidecars (:func:`_probe_scan`) so
     on key-clustered targets only files whose key ranges intersect the
-    batch are ever READ."""
+    batch are ever READ.
+
+    ``keyset`` is :func:`_batch_keyset` of ``b`` when the caller already
+    holds it; ``tgt`` the target's rows for those keys when the caller
+    already read them (the fused DV apply, :func:`_apply_batch_dv`)."""
     seq_t = b.schema["__seq"].dataType.simpleString()
-    # checkpoint the distinct batch keys: the min/max aggregate and the
-    # two semi-join probes would otherwise each re-run the batch plan
-    bkeys = b.select(*keys).distinct().localCheckpoint(eager=True)
-    conj = _batch_key_conjuncts(bkeys, keys)
-    tgt = _probe_scan(engine, table, conj)
-    if "__seq" in tgt.columns:
-        # every keyed join here is NULL-SAFE (ns_join): the engine's
-        # key identity treats NULL as a value (merge/upsert eqNullSafe),
-        # so a NULL-keyed change row must find its NULL-keyed watermark
-        # — an ANSI join would silently re-apply stale NULL-keyed rows
-        applied = (
-            ns_join(tgt, bkeys, keys, "left_semi", broadcast_right=True)
-            .groupBy(*keys)
-            .agg(F.max("__seq").alias("__applied"))
+    bkeys, conj = keyset or _batch_keyset(b, keys)
+    # every keyed join here is NULL-SAFE (ns_join): the engine's key
+    # identity treats NULL as a value (merge/upsert eqNullSafe), so a
+    # NULL-keyed change row must find its NULL-keyed watermark — an
+    # ANSI join would silently re-apply stale NULL-keyed rows
+    if tgt is None:
+        tgt = ns_join(
+            _probe_scan(engine, table, conj),
+            bkeys,
+            keys,
+            "left_semi",
+            broadcast_right=True,
         )
+    if "__seq" in tgt.columns:
+        applied = tgt.groupBy(*keys).agg(F.max("__seq").alias("__applied"))
         b = ns_join(b, applied, keys, "left", broadcast_right=True)
     else:
         b = b.withColumn("__applied", F.lit(None).cast(seq_t))
@@ -636,6 +556,125 @@ def _drop_stale_changes(
             ~(is_del & (F.col("__seq") == F.col("__applied"))), F.lit(True)
         )
     return b.filter(keep).drop("__applied", "__tomb")
+
+
+def _batch_keyset(b: DataFrame, keys: list[str]) -> tuple:
+    """(distinct batch keys, their zone-map conjuncts) for the probes.
+    The keys are checkpointed: the conjuncts' collect and every
+    semi-join probe would otherwise each re-run the batch plan."""
+    bkeys = b.select(*keys).distinct().localCheckpoint(eager=True)
+    return bkeys, batch_key_conjuncts(bkeys, keys)
+
+
+def _dv_probe(engine, table: str, keys: list[str], keyset: tuple, snap):
+    """The fused DV apply's one target read: the rows of snapshot
+    ``snap`` whose keys the batch holds, with their DV refs —
+    key-range-pruned through the zone maps, then semi-joined map-side
+    against the broadcast batch keys, so the target never shuffles."""
+    bkeys, conj = keyset
+    return ns_join(
+        _probe_scan(engine, table, conj, with_row_refs=True, snap=snap),
+        bkeys,
+        keys,
+        "left_semi",
+        broadcast_right=True,
+    )
+
+
+def _apply_batch_dv(
+    engine, table, tomb_table, b, keys, op_col, is_del, floor, keyset
+):
+    """Apply a deduplicated, sequenced batch to a deletion-vector target
+    as ONE merge-on-read commit: one DV sidecar, one append dir, one
+    snapshot (``Engine._merge_dv``), where the upsert + keyed-delete
+    path rewrites the table and commits twice.  The target is read
+    ONCE (:func:`_dv_probe`); that checkpointed frame gives both the
+    stale filter's applied watermarks and the merge's refs and old
+    values.  Clauses, in order: DELETE when the row is a delete,
+    UPDATE SET * with coalesce(new, old) (``M.upsert``'s rule)
+    otherwise, INSERT * when unmatched and not a delete.  Expectations
+    judge the upsert rows only (a quarantined upsert neither refs its
+    match nor appends); deletes bypass them, as on the upsert path.
+
+    Returns the applied deletes ``(keys, __seq)`` for the tombstone
+    log, or None — nothing done — when the batch does not fit the
+    target as it is: a new column or a changed type (the first
+    sequenced batch adds ``__seq``), an op column the target also
+    has, or a missing identity column.  The evolving upsert path
+    handles those."""
+    from polars_lake_spark.snapshots import DV_FILE_COL, DV_POS_COL
+
+    spec = engine._guard_mutable(table)
+    with engine._lock(table):
+        base = engine._snapstore(table).load()
+        tgt = _dv_probe(engine, table, keys, keyset, base)
+        have = dict(tgt.dtypes)
+        cols = {c.lower() for c in b.columns}
+        if (
+            op_col in have
+            or any(have.get(c) != t for c, t in b.dtypes if c != op_col)
+            or any(c.lower() not in cols for c in spec.identity)
+        ):
+            return None
+        tgt = tgt.localCheckpoint(eager=True)
+        b = _drop_stale_changes(
+            engine, table, tomb_table, b, keys, floor=floor, is_del=is_del,
+            keyset=keyset, tgt=tgt,
+        ).localCheckpoint(eager=True)
+        ups = b.filter(~is_del).drop(op_col)
+        if spec.expectations:
+            ups = engine._apply_expectations(
+                spec,
+                engine._with_layout(ups, spec),
+                full_schema=tgt.drop(DV_FILE_COL, DV_POS_COL).schema,
+            )
+        # deletes carry only their keys: their payload is never judged,
+        # derived from or appended
+        src = ups.withColumn(op_col, F.lit("upsert")).unionByName(
+            b.filter(is_del).select(*keys, "__seq", op_col),
+            allowMissingColumns=True,
+        )
+        n_del = F.lower(F.col(f"n.{op_col}")) == "delete"
+        engine._merge_dv(
+            table,
+            spec,
+            src,
+            keys,
+            clauses=[
+                {"action": "delete", "condition": n_del, "set": None},
+                {"action": "update", "condition": None, "set": None},
+            ],
+            nm_clauses=[{"condition": ~n_del, "values": None}],
+            bs_clauses=[],
+            null_clobbers=False,
+            base=base,
+            live=tgt,
+            judged=True,
+        )
+    return b.filter(is_del).select(*keys, "__seq")
+
+
+def _record_tombstones(engine, table, tomb_table, dels, keys) -> None:
+    """Log applied deletes ``(keys, __seq)`` in the tombstone companion,
+    creating it on first use."""
+    if tomb_table not in engine.specs:
+        # versioned + key-clustered when the engine persists: the
+        # stale-filter's tombstone probe then key-range-prunes via the
+        # zone-map sidecars instead of reading every tombstone file per
+        # batch
+        persisted = engine.root is not None
+        engine.create_table(
+            tomb_table,
+            dels,
+            keys=keys,
+            save=persisted,
+            versioned=persisted,
+            cluster_by=keys if persisted else None,
+            side_table_of=table,
+        )
+    else:
+        _guard_side_table(engine, tomb_table, table, "tombstone")
+        engine.upsert(tomb_table, dels)
 
 
 def _meta_truncate_wm(engine, meta_table: str):
@@ -774,13 +813,26 @@ def stream_apply_changes(
     with the engine's coalesce semantics — an incoming NULL never
     clobbers a stored value, i.e. DLT's ``ignore_null_updates=True``
     behavior is the default and only mode here; deletes remove EVERY
-    row with a doomed key — an O(matched) deletion-
-    vector sidecar on ``deletion_vectors`` tables
-    (:meth:`Engine.delete_keys_dv`), a keyed anti-join rewrite
-    otherwise.  Deletes of absent keys no-op (but still tombstone, so an
-    earlier-sequenced upsert arriving later stays dead).  The table and
-    tombstone writes are not one atomic commit; a crash between them is
-    repaired by replaying the batch (every step is idempotent)."""
+    row with a doomed key.  Deletes of absent keys no-op (but still
+    tombstone, so an earlier-sequenced upsert arriving later stays
+    dead).
+
+    Commits per batch: ONE on the target plus the tombstone commit
+    when the batch deletes.  On a ``deletion_vectors`` target a
+    sequenced batch that fits the target's schema applies merge-on-
+    read (:func:`_apply_batch_dv`): its deletes and the old copies of
+    its updated rows become one DV sidecar, the updated and inserted
+    rows one append dir — no existing file is rewritten, and each such
+    batch adds one dir and one sidecar that reads then union and
+    anti-join, so long-running streams should bound them with
+    :meth:`Engine.set_auto_optimize`.  A batch that adds a column (the
+    first sequenced one adds ``__seq``), an unsequenced batch and a
+    plain target take the upsert path (a rewrite of the touched
+    partitions, of the whole table when unpartitioned) plus a keyed
+    delete (an O(matched) sidecar on DV targets, a keyed anti-join
+    rewrite otherwise).  The target and tombstone writes are not one
+    atomic commit; a crash between them is repaired by replaying the
+    batch (every step is idempotent)."""
     def process(batch_df: DataFrame, batch_id: int) -> None:
         apply_changes_batch(
             engine, table, batch_df, op_col=op_col, sequence_by=sequence_by
@@ -860,9 +912,20 @@ def apply_changes_batch(
             .drop("__rn")
             .withColumnRenamed(sequence_by, "__seq")
         )
+        floor = truncate_wm()
+        keyset = _batch_keyset(b, keys)
+        if spec.deletion_vectors:
+            dels = _apply_batch_dv(
+                engine, table, tomb_table, b, keys, op_col, is_del, floor,
+                keyset,
+            )
+            if dels is not None:
+                if dels.head(1):
+                    _record_tombstones(engine, table, tomb_table, dels, keys)
+                return
         b = _drop_stale_changes(
-            engine, table, tomb_table, b, keys, floor=truncate_wm(),
-            is_del=is_del,
+            engine, table, tomb_table, b, keys, floor=floor, is_del=is_del,
+            keyset=keyset,
         )
     b = b.localCheckpoint(eager=True)  # split below reads it twice
     ups = b.filter(~is_del).drop(op_col)
@@ -885,24 +948,7 @@ def apply_changes_batch(
         else:
             engine.delete(table, dels.select(*keys), keys)
         if sequence_by is not None:
-            if tomb_table not in engine.specs:
-                # versioned + key-clustered when the engine persists:
-                # the stale-filter's tombstone probe then key-range-
-                # prunes via the zone-map sidecars instead of reading
-                # every tombstone file per batch
-                persisted = engine.root is not None
-                engine.create_table(
-                    tomb_table,
-                    dels,
-                    keys=keys,
-                    save=persisted,
-                    versioned=persisted,
-                    cluster_by=keys if persisted else None,
-                    side_table_of=table,
-                )
-            else:
-                _guard_side_table(engine, tomb_table, table, "tombstone")
-                engine.upsert(tomb_table, dels)
+            _record_tombstones(engine, table, tomb_table, dels, keys)
 
 
 def vacuum_cdc_tombstones(engine, table: str, retain_below=None) -> int:
@@ -1115,7 +1161,7 @@ def apply_changes_scd2_batch(
     # target read is key-range-pruned (_probe_scan) so on key-clustered
     # targets only files overlapping the batch's key range are READ
     bkeys = b.select(*keys).distinct().localCheckpoint(eager=True)
-    conj = _batch_key_conjuncts(bkeys, keys)
+    conj = batch_key_conjuncts(bkeys, keys)
     wm = (
         ns_join(
             _probe_scan(engine, table, conj),

@@ -261,6 +261,97 @@ def load_zonemap(write_dir: str) -> dict | None:
 
 
 # ----------------------------------------------------------------- pruning
+def probe_literal(v):
+    """Map a collected batch-key endpoint into the zone-map comparison
+    domain (``_coerce``) EXACTLY: Decimal/date/datetime travel as
+    their lossless string forms, a NaN float endpoint disqualifies its
+    column (NaN poisons every range comparison — conservative: that
+    column just prunes nothing), and an unmapped type contributes no
+    conjunct."""
+    if v is None:
+        return None
+    if isinstance(v, bool):
+        return bool(v)
+    if isinstance(v, int):
+        return v
+    if isinstance(v, float):
+        return None if v != v else v
+    if isinstance(v, str):
+        return v
+    if isinstance(v, Decimal):
+        return str(v)
+    if isinstance(v, (datetime.datetime, datetime.date)):
+        return v.isoformat()
+    return None
+
+
+def batch_key_conjuncts(bkeys, keys: list[str], in_cap: int = 64) -> list[tuple]:
+    """Per-key-column conjuncts bounding a key set (a CDC batch's, a
+    keyed DV delete's), used to key-range-prune the scans that join
+    against it: any file that can hold one of the keys satisfies every
+    conjunct, so a pruned file provably holds NONE of them and
+    contributes nothing to the key-equality semi/inner joins downstream.
+
+    Small batches (<= ``in_cap`` distinct key tuples — the common CDC
+    trigger shape) emit exact per-column IN lists: a batch touching
+    keys {5, 9_000_000} would prune NOTHING under a min/max bounding
+    box on a clustered target, but under IN only the files whose range
+    covers 5 or 9M survive.  Larger batches fall back to one min/max
+    aggregate per key column (BETWEEN conjuncts — one tiny job, no
+    driver-side key list)."""
+    from pyspark.sql import functions as F
+
+    head = bkeys.limit(in_cap + 1).collect()
+    conj = []
+    if len(head) <= in_cap:
+        for k in keys:
+            # Poison rule (mirrors the BETWEEN path): a batch key that
+            # the stats layer cannot bound disqualifies the whole
+            # column's conjunct.  That covers a NON-NULL key
+            # probe_literal cannot map (NaN float, exotic type —
+            # Spark's join equality DOES match NaN=NaN, but
+            # spec-compliant foreign-written stats ignore NaN) AND a
+            # NULL key: the downstream probe joins are NULL-SAFE (the
+            # engine's key identity — NULL matches NULL), while min/max
+            # and IN-list stats ignore NULLs, so an `IN (rest)` list
+            # could prune the very file holding the NULL-keyed rows and
+            # the stale filter would miss their watermark (r14).
+            lits, poisoned = set(), False
+            for r in head:
+                raw = r[k]
+                if raw is None:
+                    poisoned = True
+                    break
+                v = probe_literal(raw)
+                if v is None:
+                    poisoned = True
+                    break
+                lits.add(v)
+            if lits and not poisoned:
+                conj.append((k.lower(), "in", sorted(lits, key=str)))
+        return conj
+    row = bkeys.agg(
+        *[
+            a
+            for k in keys
+            for a in (
+                F.min(F.col(k)),
+                F.max(F.col(k)),
+                # NULL keys are invisible to min/max but DO match in the
+                # null-safe probe joins — any NULL poisons the conjunct
+                F.max(F.col(k).isNull()),
+            )
+        ]
+    ).head()
+    for i, k in enumerate(keys):
+        lo = probe_literal(row[3 * i])
+        hi = probe_literal(row[3 * i + 1])
+        has_null = bool(row[3 * i + 2])
+        if lo is not None and hi is not None and not has_null:
+            conj.append((k.lower(), "between", lo, hi))
+    return conj
+
+
 # Catalyst comparison node -> (op, op with its operands swapped)
 _CMP = {
     "EqualTo": ("=", "="),

@@ -770,3 +770,71 @@ def test_offload_refuses_percent_encodable_roots(spark, tmp_path):
     bad = str(tmp_path / "cold tier")
     with _pt.raises(ValueError, match="percent-encodes"):
         eng.offload_table("t", bad)
+
+
+def test_dv_table_read_plans_without_spark_jobs(spark, eng):
+    """``engine.table()`` on a DV table holding several write dirs and
+    DV sidecars launches no Spark job: each write dir's schema was
+    recorded when it was written and every sidecar has one fixed
+    schema, so no read infers a schema from footers.  A dir without a
+    recorded schema (written before it was recorded) still reads."""
+    _seed(spark, eng, "t")
+    for i in range(3):
+        eng.insert(
+            "t",
+            spark.createDataFrame(
+                [(100 + i, 9, 1.5, "d%d" % i)],
+                "id bigint, user bigint, v double, day string",
+            ),
+        )
+        eng.sql(f"DELETE FROM t WHERE id = {i}")
+    snap = eng._snapstore("t").load()
+    assert len({w for ws in snap.mapping.values() for w in ws}) >= 3
+    assert len(snap.meta["dv"]) == 3
+    sc = spark.sparkContext
+    group = f"dv-read-budget-{id(eng)}"
+    sc.setJobGroup(group, "engine.table on a DV table", False)
+    try:
+        df = eng.table("t")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert df.dtypes == [
+        ("id", "bigint"), ("user", "bigint"), ("v", "double"),
+        ("day", "string"),
+    ]
+    want = {i for i in range(3, 30)} | {100, 101, 102}
+    assert {r.id for r in df.collect()} == want
+    for f in glob.glob(eng._path("t") + "/data/*/_schema.json"):
+        os.remove(f)
+    assert {r.id for r in eng.table("t").collect()} == want
+
+
+def test_dv_keyed_delete_prunes_by_key_range(spark, eng):
+    """A keyed DV delete (``delete_keys_dv`` and ``delete`` on a DV
+    table) reads only the files whose zone-map key range can hold one
+    of the doomed keys, not the whole table."""
+    prev = spark.conf.get("spark.sql.files.maxRecordsPerFile", "0")
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "50")
+    try:
+        eng.create_table(
+            "c",
+            spark.range(1000).select(
+                F.col("id"), (F.col("id") % 7).alias("v")
+            ),
+            keys=["id"], versioned=True, deletion_vectors=True,
+            cluster_by=["id"],
+        )
+    finally:
+        spark.conf.set("spark.sql.files.maxRecordsPerFile", prev)
+    doomed = spark.createDataFrame([(5,), (6,)], "id bigint")
+    assert eng.delete_keys_dv("c", doomed, ["id"]) == 2
+    r = eng.last_scan_report
+    assert r["files_total"] >= 10, r
+    assert r["files_kept"] == 1, r
+    eng.delete("c", spark.createDataFrame([(700,), (990,)], "id bigint"))
+    r = eng.last_scan_report
+    assert r["files_total"] >= 10 and r["files_kept"] == 2, r
+    ids = {row.id for row in eng.table("c").collect()}
+    assert ids == set(range(1000)) - {5, 6, 700, 990}

@@ -486,6 +486,39 @@ def test_merge_target_named_like_the_source_alias(eng, spark):
     assert got == {1: 5.0, 2: 7.0, 3: 30.0}
 
 
+@pytest.mark.parametrize("dv", [False, True])
+def test_merge_set_columns_qualified_by_the_target(eng, spark, dv):
+    """Delta's qualified SET / INSERT column form (``SET qs.v = s.v``,
+    ``x.note`` under the alias ``x``) names the target's own columns,
+    on rewrite and deletion-vector tables alike."""
+    spark.createDataFrame(
+        [(1, 5.0), (2, 7.0), (4, 9.0)], "id bigint, v double"
+    ).createOrReplaceTempView("qs_src")
+    eng.create_table(
+        "qs",
+        spark.createDataFrame(
+            [(1, 10.0, "x"), (2, 20.0, "y"), (3, 30.0, "z")],
+            "id bigint, v double, note string",
+        ),
+        keys=["id"], versioned=dv, deletion_vectors=dv,
+    )
+    st = eng.sql(
+        "MERGE INTO qs USING qs_src AS s ON qs.id = s.id "
+        "WHEN MATCHED AND s.id = 1 THEN UPDATE SET qs.v = s.v "
+        "WHEN MATCHED THEN UPDATE SET qs.v = s.v + 1, qs.note = 'u' "
+        "WHEN NOT MATCHED THEN INSERT (qs.id, qs.v) VALUES (s.id, s.v)"
+    ).head()
+    assert st["n_affected"] == 3
+    eng.sql(
+        "MERGE INTO qs AS x USING qs_src AS s ON x.id = s.id "
+        "WHEN MATCHED AND s.id = 4 THEN UPDATE SET x.note = 'a'"
+    )
+    got = {r.id: (r.v, r.note) for r in eng.table("qs").collect()}
+    assert got == {
+        1: (5.0, "x"), 2: (8.0, "u"), 3: (30.0, "z"), 4: (9.0, "a"),
+    }
+
+
 def test_merge_clause_keyword_inside_string_literal(eng, spark):
     _merge_target(eng, spark, "kw", "kw_src")
     eng.sql(

@@ -246,6 +246,25 @@ def test_explicit_merge_ids_bump_hwm(spark, tmp_path):
     assert len(ids) == len(set(ids))
 
 
+def test_dv_merge_ids_bump_hwm(spark, tmp_path):
+    """The merge-on-read MERGE of a deletion-vector table advances the
+    high-water mark past a NEW explicit id too, as the rewrite path
+    does — else the next insert re-issues it."""
+    eng = Engine(spark, str(tmp_path / "wh"))
+    eng.create_table(
+        "t", _texts(spark, 3), keys=["row_id"], versioned=True,
+        deletion_vectors=True,
+        identity={"row_id": {"start": 1, "step": 1}},
+    )
+    eng.merge(
+        "t",
+        spark.createDataFrame([(15, "explicit")], "row_id bigint, text string"),
+    )
+    eng.insert("t", _texts(spark, 3, "x"))
+    ids = sorted(r.row_id for r in eng.table("t").collect())
+    assert ids == [1, 2, 3, 15, 16, 17, 18], ids
+
+
 def test_copy_into_identity_table(spark, tmp_path):
     """r14 review #5: COPY INTO omits the identity column (the engine
     assigns) and refuses source files that carry it."""

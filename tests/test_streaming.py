@@ -869,13 +869,13 @@ def test_batch_key_conjuncts_nan_poisons_in_list(spark):
     poison too (r14): the probe joins are NULL-SAFE — the engine's key
     identity matches NULL=NULL — while min/max and IN-list stats ignore
     NULLs, so pruning on them could hide the NULL-keyed watermark."""
-    from polars_lake_spark.streaming.ingest import _batch_key_conjuncts
+    from polars_lake_spark.zonemaps import batch_key_conjuncts
 
     nan = float("nan")
     b = spark.createDataFrame(
         [(nan, 7), (5.0, 9)], "k double, j bigint"
     )
-    conj = _batch_key_conjuncts(b, ["k", "j"])
+    conj = batch_key_conjuncts(b, ["k", "j"])
     assert ("k", "in", [5.0]) not in conj
     assert all(c[0] != "k" for c in conj), conj
     assert ("j", "in", [7, 9]) in conj
@@ -884,7 +884,7 @@ def test_batch_key_conjuncts_nan_poisons_in_list(spark):
     b2 = spark.createDataFrame(
         [(None, 7), (5.0, 9)], "k double, j bigint"
     )
-    conj2 = _batch_key_conjuncts(b2, ["k", "j"])
+    conj2 = batch_key_conjuncts(b2, ["k", "j"])
     assert all(c[0] != "k" for c in conj2), conj2
     assert ("j", "in", [7, 9]) in conj2
     # and in the BETWEEN (large-batch) path
@@ -892,7 +892,7 @@ def test_batch_key_conjuncts_nan_poisons_in_list(spark):
         "CASE WHEN id = 50 THEN NULL ELSE CAST(id AS DOUBLE) END AS k",
         "id AS j",
     )
-    conj3 = _batch_key_conjuncts(big, ["k", "j"])
+    conj3 = batch_key_conjuncts(big, ["k", "j"])
     assert all(c[0] != "k" for c in conj3), conj3
     assert ("j", "between", 0, 99) in conj3
 
@@ -995,3 +995,130 @@ def test_tie_hash_map_only_difference_is_deterministic(spark, tmp_path):
     win2 = {r.k: r.v for r in eng.table("t2").collect()}[1]
     apply_changes_batch(eng, "t2", b2, sequence_by="seq")
     assert {r.k: r.v for r in eng.table("t2").collect()}[1] == win2
+
+
+def _dv_cdc_target(spark, eng, **kw):
+    """A deletion-vector target past its first sequenced batch (the one
+    that adds ``__seq`` by schema evolution)."""
+    from polars_lake_spark.streaming.ingest import apply_changes_batch
+
+    seed = spark.range(0, 400).select(
+        F.col("id").alias("k"),
+        F.concat(F.lit("v"), F.col("id")).alias("s"),
+        (F.col("id") % 7).cast("int").alias("score"),
+    )
+    eng.create_table(
+        "t", seed, keys=["k"], versioned=True, deletion_vectors=True,
+        cluster_by=["k"], **kw,
+    )
+    schema = "k bigint, s string, score int, _op string, seq bigint"
+    first = spark.createDataFrame([(1, "b1", 1, "update", 10)], schema)
+    apply_changes_batch(eng, "t", first, sequence_by="seq")
+    return schema
+
+
+def test_apply_changes_dv_target_one_merge_on_read_commit(spark, tmp_path):
+    """On a deletion-vector target a batch's upserts and deletes land as
+    ONE target snapshot: an 'append' whose DV list grows by exactly one
+    sidecar; no file from before the batch is rewritten (mtimes
+    unchanged); the tombstone companion gets its own commit."""
+    import os
+
+    from polars_lake_spark.streaming.ingest import apply_changes_batch
+
+    eng = Engine(spark, str(tmp_path / "r"))
+    schema = _dv_cdc_target(spark, eng)
+    store = eng._snapstore("t")
+    before = store.load()
+    data = os.path.join(str(tmp_path / "r"), "t", "data")
+    mtimes = {
+        os.path.join(cur, f): os.stat(os.path.join(cur, f)).st_mtime_ns
+        for cur, _d, fs in os.walk(data)
+        for f in fs
+    }
+    b = spark.createDataFrame(
+        [
+            (2, "u2", 3, "update", 20),    # matched: ref + append
+            (3, None, None, "update", 20),  # NULLs keep old values
+            (5, None, None, "delete", 20),  # matched delete: ref only
+            (900, "n", 4, "insert", 20),   # unmatched: append
+            (901, None, None, "delete", 20),  # absent key: tombstone
+        ],
+        schema,
+    )
+    apply_changes_batch(eng, "t", b, sequence_by="seq")
+    after = store.load()
+    assert after.version == before.version + 1
+    assert after.op == "append"
+    assert after.meta["dv"][:-1] == (before.meta or {}).get("dv", [])
+    assert len(after.meta["dv"]) == len((before.meta or {}).get("dv", [])) + 1
+    for path, ns in mtimes.items():
+        assert os.stat(path).st_mtime_ns == ns, path
+    got = {r.k: (r.s, r.score, r["__seq"]) for r in eng.table("t").collect()}
+    assert got[2] == ("u2", 3, 20)
+    assert got[3] == ("v3", 3, 20)
+    assert 5 not in got
+    assert got[900] == ("n", 4, 20)
+    assert got[1] == ("b1", 1, 10) and got[4] == ("v4", 4, None)
+    assert len(got) == 400
+    tombs = {r.k for r in eng.table("t_cdc_tombstones").collect()}
+    assert tombs == {5, 901}
+    # a replay re-applies idempotently
+    apply_changes_batch(eng, "t", b, sequence_by="seq")
+    assert {
+        r.k: (r.s, r.score, r["__seq"]) for r in eng.table("t").collect()
+    } == got
+
+
+def test_apply_changes_dv_delete_bypasses_expectations(spark, tmp_path):
+    """Expectations judge upsert rows only: a delete whose payload breaks
+    a 'drop' rule still deletes, while a violating upsert neither lands
+    nor removes the row it matches."""
+    from polars_lake_spark.streaming.ingest import apply_changes_batch
+
+    eng = Engine(spark, str(tmp_path / "r"))
+    schema = _dv_cdc_target(
+        spark, eng,
+        expectations={"score_ok": {"expr": "score >= 0", "action": "drop"}},
+    )
+    b = spark.createDataFrame(
+        [
+            (7, "gone", -1, "delete", 20),  # violating payload, deletes
+            (8, "bad", -5, "update", 20),   # violating upsert: dropped
+            (9, "ok", 2, "update", 20),
+        ],
+        schema,
+    )
+    apply_changes_batch(eng, "t", b, sequence_by="seq")
+    got = {r.k: (r.s, r.score) for r in eng.table("t").collect()}
+    assert 7 not in got
+    assert got[8] == ("v8", 1)
+    assert got[9] == ("ok", 2)
+    assert len(got) == 399
+
+
+def test_apply_changes_dv_probe_plan_never_shuffles_target(spark, tmp_path):
+    """The fused DV apply's one target read reaches its semi-join
+    against the BROADCAST batch keys with no exchange between them, and
+    no sort-merge / shuffled join appears: per batch only batch-sized
+    data moves."""
+    from polars_lake_spark.streaming.ingest import _batch_keyset, _dv_probe
+
+    eng = Engine(spark, str(tmp_path / "r"))
+    schema = _dv_cdc_target(spark, eng)
+    eng.sql("DELETE FROM t WHERE k = 11")  # a live DV sidecar
+    b = spark.createDataFrame(
+        [(5, "x", 1, "update", 20), (2000, "y", 1, "update", 20)], schema
+    ).withColumnRenamed("seq", "__seq")
+    store = eng._snapstore("t")
+    probe = _dv_probe(eng, "t", ["k"], _batch_keyset(b, ["k"]), store.load())
+    assert {r.k for r in probe.collect()} == {5}
+    plan = probe._jdf.queryExecution().executedPlan().toString()
+    assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
+    lines = plan.splitlines()
+    i_semi = next(i for i, l in enumerate(lines) if "LeftSemi" in l)
+    i_scan = next(
+        i for i, l in enumerate(lines) if i > i_semi and "FileScan" in l
+    )
+    between = lines[i_semi + 1 : i_scan]
+    assert not any("Exchange" in l for l in between), between
