@@ -1,23 +1,33 @@
-"""SQL DML statements over engine tables.
+"""SQL DML and DDL statements over engine tables.
 
 Vanilla Spark SQL cannot mutate parquet-backed views, so
 ``Engine.sql("DELETE FROM t WHERE ...")`` would fail at the analyzer.
 This module routes the statements below through the engine's real
 mutation paths.  :func:`parse_statement` parses each statement once
-with Spark's own parser (:mod:`polars_lake_spark.sqltree`), and DELETE
+with Spark's own parser (:mod:`polars_lake_spark.sqltree`), and every
+statement Spark has a grammar for routes by plan node: DELETE
 (``DeleteFromTable``), UPDATE (``UpdateTable``), INSERT INTO / INSERT
-OVERWRITE (``InsertIntoStatement``) and MERGE (``MergeIntoTable``)
-route by plan node: clause boundaries, conditions, SET values and
-sources are cut from node origins, and time travel is spliced from
+OVERWRITE (``InsertIntoStatement``), MERGE (``MergeIntoTable``), CREATE
+TABLE and CTAS (``CreateTable``, ``CreateTableAsSelect``,
+``ReplaceTableAsSelect``), ``DropTable``, ``TruncateTable``,
+``AnalyzeTable`` / ``AnalyzeColumn``, ``ShowPartitions``,
+``ShowCreateTable``, ``ShowTables``, ``DescribeRelation`` and the ALTER
+TABLE forms (``AlterTableClusterBy``, ``SetTableProperties``,
+``AddCheckConstraint``, ``DropConstraint``, ``AddColumns``,
+``DropColumns``, ``AlterColumns``, ``RenameColumn``, ``RenameTable``).
+Names, types, properties, conditions and sources are read from the
+nodes and cut from node origins, and time travel is spliced from
 ``RelationTimeTravel`` nodes, so every literal, comment and quoted name
-reads exactly as Spark reads it.  A MERGE or INSERT Spark cannot parse
-raises Spark's ``ParseException``.  The rest still route by prefix
-regex: Spark has no grammar for APPLY CHANGES, CONVERT TO VERSIONED,
-COPY INTO, OPTIMIZE, VACUUM, RESTORE and REORG (and parses DESCRIBE
-HISTORY as a column DESCRIBE) nor for ``CREATE VERSIONED TABLE``, so
-CTAS and CREATE TABLE keep one regex route rather than splitting over
-two; the ALTER, DROP, TRUNCATE, ANALYZE and SHOW forms have not moved
-to the tree yet.
+reads exactly as Spark reads it.  ``CREATE [OR REPLACE] VERSIONED
+TABLE`` parses with its ``VERSIONED`` keyword blanked to spaces, so its
+origins still index the text.  A statement Spark cannot parse raises
+Spark's ``ParseException``, and a clause the engine does not read
+(USING, LOCATION, COMMENT, OPTIONS, IF NOT EXISTS, a PARTITION spec,
+DESCRIBE EXTENDED, SHOW TABLES IN/LIKE, ...) runs vanilla.  Only the
+engine-only statements route by prefix regex: Spark has no grammar for
+APPLY CHANGES, CONVERT TO VERSIONED, COPY INTO, OPTIMIZE, VACUUM,
+RESTORE and REORG, and it parses DESCRIBE HISTORY|DETAIL as a column
+DESCRIBE.
 
 * ``DELETE FROM t [WHERE p]``            → row-exact rewrite of the kept
   slice (NOT key-based ``engine.delete`` — with non-unique keys a key
@@ -52,16 +62,25 @@ to the tree yet.
   alias reads the target row, one qualified by the source's alias or
   table name reads the source row, and anything else is left as
   written
-* ``CREATE [OR REPLACE] [VERSIONED] TABLE t [PARTITIONED BY (cols)]
-  [CLUSTER BY (cols)] AS SELECT ...`` → ``engine.create_table_as``
-  (CLUSTER BY = clustered writes: every versioned write
-  range-partitions + sorts on the key so zone maps stay tight from
-  ingest).  OR REPLACE on an existing same-layout VERSIONED table is
-  ONE 'rewrite' snapshot — the pre-replace state stays
+* ``CREATE [OR REPLACE] [VERSIONED] TABLE t [PARTITIONED BY (cols) |
+  CLUSTER BY (cols)] [TBLPROPERTIES (...)] AS <query>`` →
+  ``engine.create_table`` over the query's frame (CLUSTER BY =
+  clustered writes: every versioned write range-partitions + sorts on
+  the key so zone maps stay tight from ingest; Spark refuses both
+  clauses together, so a partitioned table clusters through a
+  ``'cluster_by'`` property).  OR REPLACE on an existing same-layout
+  VERSIONED table is ONE 'rewrite' snapshot — the pre-replace state stays
   time-travelable, and constraints/expectations reset to the (empty)
   new definition, Delta's property-reset semantics; a layout or
   versioning change drops and recreates instead (the SELECT may
   reference the replaced table — it is pinned before the drop)
+* ``CREATE [VERSIONED] TABLE t (col type, ...) [PARTITIONED BY (cols) |
+  CLUSTER BY (cols)] [TBLPROPERTIES (...)]`` → an empty typed
+  ``engine.create_table``; TBLPROPERTIES carry the spec fields SHOW
+  CREATE TABLE emits, so the two round-trip
+* ``ALTER TABLE t SET TBLPROPERTIES ('k'='v', ...)`` → deletion vectors
+  on/off and auto-optimize thresholds; every pair is validated before
+  any applies
 * ``APPLY CHANGES INTO t FROM src|(<select>) [KEYS (k, ...)] [APPLY AS
   DELETE WHEN c] [APPLY AS TRUNCATE WHEN c] [SEQUENCE BY col] [STORED
   AS SCD TYPE 1|2]`` → one CDC batch application through
@@ -73,7 +92,7 @@ to the tree yet.
 * ``SHOW PARTITIONS t`` → partition rel-paths, METADATA-only
   (snapshot mapping keys / directory names — never a data scan)
 * ``DROP TABLE [IF EXISTS] t``           → ``engine.drop_table``
-* ``ANALYZE TABLE t [COMPUTE STATISTICS [FOR COLUMNS c, ...]]``
+* ``ANALYZE TABLE t COMPUTE STATISTICS [FOR COLUMNS c, ...]``
   → ``engine.analyze_table`` (stats persist in the manifest)
 * ``VACUUM t [RETAIN n]``                → ``engine.vacuum`` (versioned)
 * ``OPTIMIZE t [WHERE pred] [ZORDER BY (cols)]`` → ``engine.compact``
@@ -124,7 +143,8 @@ inserted/updated/deleted (per-action splits would cost extra count jobs
 over the merge join; callers needing them should diff
 ``engine.changes()`` across the statement's snapshot instead); ANALYZE
 reports table rows, VACUUM removed version dirs, OPTIMIZE data files
-before compaction.  Non-DML statements fall through to ``spark.sql`` untouched.
+before compaction, SET TBLPROPERTIES the pairs set.  Everything else
+falls through to ``spark.sql`` untouched.
 Table names resolve like everywhere else: the registered name
 (``schema.table``) or its view key (``schema__table``).
 """
@@ -132,28 +152,30 @@ Table names resolve like everywhere else: the registered name
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 import re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from polars_lake_spark import sqltree
-from polars_lake_spark.exprs import referenced_columns, substitute_columns
 from polars_lake_spark.layout import BUCKET_COL as _BUCKET_COL
 
-_CTAS = re.compile(
-    r"^\s*CREATE\s+(OR\s+REPLACE\s+)?(VERSIONED\s+)?TABLE\s+([A-Za-z_][\w.]*)"
-    r"(?:\s+PARTITIONED\s+BY\s*\(([^)]*)\))?"
-    r"(?:\s+CLUSTER\s+BY\s*\(([^)]*)\))?"
-    r"\s+AS\s+(SELECT\b.+?)\s*;?\s*$",
-    re.I | re.S,
+# Spark has no VERSIONED keyword: it is blanked to spaces before the
+# parse, so node origins still index the statement's text
+_VERSIONED = re.compile(
+    r"^\s*CREATE\s+(?:OR\s+REPLACE\s+)?(VERSIONED)\s+TABLE\b", re.I
 )
-_SHOW_PARTITIONS = re.compile(
-    r"^\s*SHOW\s+PARTITIONS\s+([A-Za-z_][\w.]*)\s*;?\s*$", re.I
+# Engine-only statements, matched by regex alone: Spark's parser has no
+# grammar for them, or (DESCRIBE HISTORY t) misreads them as a column
+# DESCRIBE, so their parse tree would route nothing.
+_UNPARSED = frozenset(
+    "APPLY CONVERT COPY OPTIMIZE VACUUM RESTORE REORG".split()
 )
-_DROP = re.compile(
-    r"^\s*DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?([A-Za-z_][\w.]*)\s*;?\s*$",
+_DESCRIBE_META = re.compile(
+    r"^\s*DESC(?:RIBE)?\s+(HISTORY|DETAIL)\s+([A-Za-z_][\w.]*)\s*;?\s*$",
     re.I,
 )
 _APPLY_CHANGES = re.compile(
@@ -167,11 +189,6 @@ _APPLY_CHANGES = re.compile(
     r"\s*;?\s*$",
     re.I | re.S,
 )
-_ANALYZE = re.compile(
-    r"^\s*ANALYZE\s+TABLE\s+([A-Za-z_][\w.]*)"
-    r"(?:\s+COMPUTE\s+STATISTICS(?:\s+FOR\s+COLUMNS\s+(.+?))?)?\s*;?\s*$",
-    re.I,
-)
 _VACUUM = re.compile(
     r"^\s*VACUUM\s+([A-Za-z_][\w.]*)(?:\s+RETAIN\s+(\d+))?"
     r"(?:\s+(DRY\s+RUN))?\s*;?\s*$",
@@ -183,31 +200,10 @@ _OPTIMIZE = re.compile(
     r"(?:\s+ZORDER\s+BY\s*\(([^)]*)\))?\s*;?\s*$",
     re.I | re.S,
 )
-_TRUNCATE = re.compile(
-    r"^\s*TRUNCATE\s+TABLE\s+([A-Za-z_][\w.]*)\s*;?\s*$", re.I
-)
 _COPY_INTO = re.compile(
     r"^\s*COPY\s+INTO\s+([A-Za-z_][\w.]*)\s+FROM\s+'([^']+)'"
     r"(?:\s+FILEFORMAT\s*=\s*([A-Za-z_]+))?(?:\s+(FORCE))?\s*;?\s*$",
     re.I,
-)
-_CREATE_TABLE = re.compile(
-    r"^\s*CREATE\s+(VERSIONED\s+)?TABLE\s+([A-Za-z_][\w.]*)\s*"
-    r"\((.+?)\)(?:\s+PARTITIONED\s+BY\s*\(([^)]*)\))?"
-    r"(?:\s+CLUSTER\s+BY\s*\(([^)]*)\))?"
-    r"(?:\s+TBLPROPERTIES\s*\((.+)\))?\s*;?\s*$",
-    re.I | re.S,
-)
-_TBLPROP_PAIR = re.compile(r"'((?:[^']|'')*)'\s*=\s*'((?:[^']|'')*)'")
-# spec fields SHOW CREATE TABLE serializes into TBLPROPERTIES and the
-# literal CREATE statement maps back to create_table kwargs — keeping
-# SHOW CREATE TABLE a true round-trip
-_CREATE_PROPS = frozenset(
-    "keys bucket_by n_buckets deletion_vectors zone_maps compression "
-    "format auto_optimize.dv_sidecars auto_optimize.write_dirs".split()
-)
-_SHOW_CREATE = re.compile(
-    r"^\s*SHOW\s+CREATE\s+TABLE\s+([A-Za-z_][\w.]*)\s*;?\s*$", re.I
 )
 _REORG = re.compile(
     r"^\s*REORG\s+TABLE\s+([A-Za-z_][\w.]*)\s+APPLY\s*\(\s*PURGE\s*\)"
@@ -217,73 +213,21 @@ _REORG = re.compile(
 _CONVERT = re.compile(
     r"^\s*CONVERT\s+TO\s+VERSIONED\s+([A-Za-z_][\w.]*)\s*;?\s*$", re.I
 )
-_ALTER_CLUSTER = re.compile(
-    r"^\s*ALTER\s+TABLE\s+([A-Za-z_][\w.]*)\s+CLUSTER\s+BY\s+"
-    r"(?:\(([^)]*)\)|(NONE))\s*;?\s*$",
-    re.I,
-)
-_SET_TBLPROPERTIES = re.compile(
-    r"^\s*ALTER\s+TABLE\s+([A-Za-z_][\w.]*)\s+SET\s+TBLPROPERTIES\s*"
-    r"\(\s*'([\w.]+)'\s*=\s*'(\w+)'\s*\)\s*;?\s*$",
-    re.I,
-)
-_ALTER_ADD_CONSTRAINT = re.compile(
-    r"^\s*ALTER\s+TABLE\s+([A-Za-z_][\w.]*)\s+ADD\s+CONSTRAINT\s+"
-    r"([A-Za-z_]\w*)\s+CHECK\s*\((.+)\)\s*;?\s*$",
-    re.I | re.S,
-)
-_ALTER_DROP_CONSTRAINT = re.compile(
-    r"^\s*ALTER\s+TABLE\s+([A-Za-z_][\w.]*)\s+DROP\s+CONSTRAINT\s+"
-    r"(IF\s+EXISTS\s+)?([A-Za-z_]\w*)\s*;?\s*$",
-    re.I,
-)
-_ALTER_ADD_COLUMN = re.compile(
-    r"^\s*ALTER\s+TABLE\s+([A-Za-z_][\w.]*)\s+ADD\s+COLUMNS?\s+(.+?)\s*;?\s*$",
-    re.I | re.S,
-)
-_ALTER_DROP_COLUMN = re.compile(
-    r"^\s*ALTER\s+TABLE\s+([A-Za-z_][\w.]*)\s+DROP\s+COLUMNS?\s+"
-    r"(?:\(\s*(.+?)\s*\)|([A-Za-z_]\w*(?:\s*,\s*[A-Za-z_]\w*)*))\s*;?\s*$",
-    re.I,
-)
-_ALTER_COLUMN_TYPE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+([A-Za-z_][\w.]*)\s+ALTER\s+COLUMN\s+"
-    r"([A-Za-z_]\w*)\s+TYPE\s+(.+?)\s*;?\s*$",
-    re.I | re.S,
-)
-_ALTER_RENAME_COLUMN = re.compile(
-    r"^\s*ALTER\s+TABLE\s+([A-Za-z_][\w.]*)\s+RENAME\s+COLUMN\s+"
-    r"([A-Za-z_]\w*)\s+TO\s+([A-Za-z_]\w*)\s*;?\s*$",
-    re.I,
-)
-_ALTER_RENAME_TABLE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+([A-Za-z_][\w.]*)\s+RENAME\s+TO\s+"
-    r"([A-Za-z_][\w.]*)\s*;?\s*$",
-    re.I,
-)
-_SHOW_TABLES = re.compile(r"^\s*SHOW\s+TABLES\s*;?\s*$", re.I)
-_DESCRIBE_HISTORY = re.compile(
-    r"^\s*DESC(?:RIBE)?\s+HISTORY\s+([A-Za-z_][\w.]*)\s*;?\s*$", re.I
-)
-_DESCRIBE_DETAIL = re.compile(
-    r"^\s*DESC(?:RIBE)?\s+DETAIL\s+([A-Za-z_][\w.]*)\s*;?\s*$", re.I
-)
-_DESCRIBE = re.compile(
-    r"^\s*DESC(?:RIBE)?\s+(?:TABLE\s+)?([A-Za-z_][\w.]*)\s*;?\s*$", re.I
-)
 _RESTORE = re.compile(
     r"^\s*RESTORE\s+(?:TABLE\s+)?([A-Za-z_][\w.]*)\s+TO\s+"
     r"(?:VERSION\s+AS\s+OF\s+(\d+)"
     r"|TIMESTAMP\s+AS\s+OF\s+'([^']*)')\s*;?\s*$",
     re.I,
 )
-# First keywords of the statements routed by regex alone: Spark's parser
-# has no grammar for them, or (DESCRIBE HISTORY t) misreads them as its
-# own statement, so their parse tree would route nothing.
-_UNPARSED = frozenset(
-    "APPLY CONVERT COPY OPTIMIZE VACUUM RESTORE REORG DESC DESCRIBE SHOW"
+# spec fields SHOW CREATE TABLE serializes into TBLPROPERTIES and the
+# literal CREATE statement maps back to create_table kwargs — keeping
+# SHOW CREATE TABLE a true round-trip
+_CREATE_PROPS = frozenset(
+    "keys bucket_by n_buckets deletion_vectors zone_maps compression "
+    "format cluster_by auto_optimize.dv_sidecars auto_optimize.write_dirs"
     .split()
 )
+_AUTO_OPT = ("auto_optimize.dv_sidecars", "auto_optimize.write_dirs")
 
 
 def _resolve(engine, name: str) -> str | None:
@@ -325,17 +269,31 @@ def parse_statement(engine, query: str) -> tuple[str, object, dict]:
     ``text`` (None for regex-routed engine statements and anything Spark
     rejects), with every time-travel reference to a versioned engine
     table spliced to a pinned view — ``asof`` maps view -> (table,
-    version).  Only a splice costs a second parse."""
+    version).  Only a splice costs a second parse.  A rejected ``CREATE
+    VERSIONED`` statement comes back with the keyword blanked, so that
+    ``spark.sql`` raises Spark's own error for the rest of it."""
     words = query.split(None, 1)
-    if not words or words[0].upper() in _UNPARSED:
+    if not words or words[0].upper() in _UNPARSED or _DESCRIBE_META.match(
+        query
+    ):
         return query, None, {}
-    plan = sqltree.parse_plan(engine.spark, query)
+    plan = sqltree.parse_plan(engine.spark, _unversioned(query))
     if plan is None:
-        return query, None, {}
+        return _unversioned(query), None, {}
     text, asof = _splice_time_travel(engine, query, plan)
     if asof:
-        plan = sqltree.parse_plan(engine.spark, text)
+        plan = sqltree.parse_plan(engine.spark, _unversioned(text))
     return text, plan, asof
+
+
+def _unversioned(query: str) -> str:
+    """``query`` with a leading ``CREATE [OR REPLACE] VERSIONED TABLE``'s
+    keyword blanked to spaces."""
+    m = _VERSIONED.match(query)
+    if m is None:
+        return query
+    a, b = m.span(1)
+    return query[:a] + " " * (b - a) + query[b:]
 
 
 def _splice_time_travel(engine, query: str, plan) -> tuple[str, dict]:
@@ -434,7 +392,7 @@ def _metadata_ddl_ok(engine, name: str) -> bool:
 
 
 def _insert_frame(
-    engine, name: str, stmt: str, cols: list[str], select_sql: str
+    engine, name: str, stmt: str, cols: list[str], df: DataFrame
 ) -> DataFrame:
     """Resolve an INSERT source SELECT against the target table's schema
     (shared by INSERT INTO and INSERT OVERWRITE): listed columns resolve
@@ -445,7 +403,6 @@ def _insert_frame(
     later scans of the mixed directory reject), and the result is
     materialized ONCE so the reported count and the write agree even for
     a non-deterministic SELECT."""
-    df = engine.spark.sql(select_sql)
     tschema = engine.table(name).schema
     canon = {f.name.lower(): f.name for f in tschema.fields}
     # IDENTITY columns are GENERATED ALWAYS: listing one is refused,
@@ -643,7 +600,7 @@ def _merge(engine, query: str, plan) -> DataFrame | None:
         # (schema__table) — resolve like every other reference here
         src = engine.table(rsrc) if rsrc else engine.spark.table(src_name)
     else:
-        src = engine.spark.sql(sqltree.text(query, src))
+        src = sqltree.frame(engine.spark, src)
     # n_affected and the merge join must see the same rows: pin ONLY
     # a non-deterministic source (same probe as the engine API,
     # engine._pin_if_nondeterministic). An unconditional eager
@@ -670,12 +627,386 @@ def _merge(engine, query: str, plan) -> DataFrame | None:
     return _status(engine, "merge", name, n)
 
 
+# plan nodes of the DDL statements on one table, routed by node kind
+_TABLE_DDL = frozenset(
+    "DropTable TruncateTable AnalyzeTable AnalyzeColumn ShowPartitions "
+    "ShowCreateTable DescribeRelation AlterTableClusterBy SetTableProperties "
+    "AddCheckConstraint DropConstraint AddColumns DropColumns AlterColumns "
+    "RenameColumn RenameTable".split()
+)
+
+
+def _props(m) -> dict[str, str]:
+    """A TBLPROPERTIES map (a Scala ``Map``) as a dict."""
+    return {t._1(): t._2() for t in sqltree.seq(m.toSeq())}
+
+
+def _create_kwargs(raw: str, props: dict) -> tuple[dict, dict]:
+    """``create_table`` kwargs from CREATE's TBLPROPERTIES: the engine
+    spec fields SHOW CREATE TABLE emits (round-trip), plus
+    ``'constraint.<name>'``, ``'generated.<col>'``, ``'identity.<col>'``
+    and ``'expectation.<name>.<action>'`` entries; and the
+    ``auto_optimize`` thresholds, applied after the create."""
+    kwargs, constraints, auto_opt = {}, {}, {}
+    for k, v in props.items():
+        lk = k.lower()
+        if lk.startswith("expectation."):
+            # 'expectation.<name>.<drop|track|quarantine>' = '<expr>'
+            body = k[len("expectation."):]
+            ename, _, action = body.rpartition(".")
+            if not ename or action.lower() not in (
+                "drop", "track", "quarantine",
+            ):
+                raise ValueError(
+                    f"CREATE TABLE {raw}: expectation property "
+                    f"{k!r} must be "
+                    "'expectation.<name>.<drop|track|quarantine>'"
+                )
+            kwargs.setdefault("expectations", {})[ename] = {
+                "expr": v,
+                "action": action.lower(),
+            }
+        elif lk.startswith("constraint."):
+            constraints[k[len("constraint."):]] = v
+        elif lk.startswith("generated."):
+            kwargs.setdefault("generated", {})[k[len("generated."):]] = v
+        elif lk.startswith("identity."):
+            # 'identity.<col>' = '<start>,<step>' (both optional)
+            ps = [x.strip() for x in v.split(",")]
+            kwargs.setdefault("identity", {})[k[len("identity."):]] = {
+                "start": int(ps[0]) if ps and ps[0] else 1,
+                "step": int(ps[1]) if len(ps) > 1 and ps[1] else 1,
+            }
+        elif lk in ("keys", "bucket_by", "cluster_by"):
+            kwargs[lk] = [c.strip() for c in v.split(",")]
+        elif lk == "n_buckets":
+            kwargs[lk] = int(v)
+        elif lk in ("deletion_vectors", "zone_maps"):
+            kwargs[lk] = v.lower() == "true"
+        elif lk in ("compression", "format"):
+            kwargs[lk] = v
+        elif lk in _AUTO_OPT:
+            if not v.isdigit():
+                raise ValueError(
+                    f"CREATE TABLE {raw}: {k!r} must be an integer threshold"
+                )
+            auto_opt[lk.split(".", 1)[1]] = int(v)
+        else:
+            raise ValueError(
+                f"CREATE TABLE {raw}: unsupported table property "
+                f"{k!r} (supported: {sorted(_CREATE_PROPS)} and "
+                "'constraint.<name>' / 'generated.<col>' / "
+                "'identity.<col>' / "
+                "'expectation.<name>.<action>')"
+            )
+    if constraints:
+        kwargs["constraints"] = constraints
+    return kwargs, auto_opt
+
+
+def _create(engine, query: str, plan) -> DataFrame | None:
+    """``CREATE [OR REPLACE] [VERSIONED] TABLE t [(cols)] [PARTITIONED BY
+    (cols) | CLUSTER BY (cols)] [TBLPROPERTIES (...)] [AS <query>]``
+    from its ``CreateTable`` / ``CreateTableAsSelect`` /
+    ``ReplaceTableAsSelect`` node.  Spark refuses PARTITIONED BY with
+    CLUSTER BY, so a partitioned table clusters through a
+    ``'cluster_by'`` property.  USING, LOCATION, COMMENT, OPTIONS, IF
+    NOT EXISTS, a bare REPLACE TABLE and any other partition transform
+    run vanilla."""
+    k = sqltree.kind(plan)
+    replace = k == "ReplaceTableAsSelect"
+    ts = plan.tableSpec()
+    if (
+        (not plan.orCreate() if replace else plan.ignoreIfExists())
+        or ts.provider().isDefined()
+        or ts.location().isDefined()
+        or ts.comment().isDefined()
+        or ts.serde().isDefined()
+        or ts.collation().isDefined()
+        or ts.external()
+        or ts.optionExpression().options().size()
+    ):
+        return None
+    layout = {"identity": [], "cluster_by": []}
+    for t in sqltree.seq(plan.partitioning()):
+        if t.name() not in layout:
+            return None
+        layout[t.name()] += [".".join(r.fieldNames()) for r in t.references()]
+    raw = sqltree.name(plan.name())
+    kwargs, auto_opt = _create_kwargs(raw, _props(ts.properties()))
+    if layout["cluster_by"]:
+        if "cluster_by" in kwargs:
+            raise ValueError(
+                f"CREATE TABLE {raw}: CLUSTER BY and a 'cluster_by' "
+                "property"
+            )
+        # CLUSTER BY (cols): clustered writes (zone-map tightness from
+        # ingest) — requires VERSIONED
+        kwargs["cluster_by"] = layout["cluster_by"]
+    if layout["identity"]:
+        kwargs["partition_by"] = layout["identity"]
+    if _VERSIONED.match(query):
+        kwargs["versioned"] = True
+    existing = _resolve(engine, raw)
+    if existing is not None and not replace:
+        raise ValueError(f"CREATE TABLE {raw}: table already exists")
+    if k == "CreateTable":
+        # An EMPTY typed table through create_table (the other statement
+        # a first-time user types before any data exists), typed by
+        # Spark's own reading of the column definitions
+        for c in sqltree.seq(plan.columns()):
+            if (
+                c.defaultValue().isDefined()
+                or c.generationExpression().isDefined()
+                or c.identityColumnSpec().isDefined()
+            ):
+                raise ValueError(
+                    f"CREATE TABLE {raw}: column {c.name()!r}: DEFAULT, "
+                    "GENERATED and IDENTITY clauses are declared as "
+                    "'generated.<col>' / 'identity.<col>' TBLPROPERTIES"
+                )
+        empty = engine.spark.createDataFrame(
+            [], StructType.fromJson(json.loads(plan.tableSchema().json()))
+        )
+        for c in kwargs.get("identity", {}):
+            # the column is DECLARED in the defs (with its type) but
+            # GENERATED ALWAYS: the engine assigns it as BIGINT
+            have = {x.lower(): x for x in empty.columns}
+            if c.lower() in have:
+                f = empty.schema[have[c.lower()]]
+                if f.dataType.simpleString() != "bigint":
+                    raise ValueError(
+                        f"CREATE TABLE {raw}: identity column {c!r} "
+                        f"must be BIGINT (got {f.dataType.simpleString()})"
+                    )
+                empty = empty.drop(have[c.lower()])
+        engine.create_table(raw, empty, **kwargs)
+        op, name = "create_table", raw
+    elif existing is None:
+        df = sqltree.frame(engine.spark, plan.query())
+        engine.create_table(raw, df, **kwargs)
+        op, name = "create_table_as", raw
+    else:
+        op, name = _replace_as(engine, existing, raw, plan, kwargs)
+    if auto_opt:
+        engine.set_auto_optimize(name, **auto_opt)
+    n = 0 if op == "create_table" else engine.table(name).count()
+    return _status(engine, op, name, n)
+
+
+def _replace_as(engine, existing, raw, plan, kwargs) -> tuple[str, str]:
+    """CREATE OR REPLACE ... AS over an existing table; returns the
+    status ``(operation, table)``."""
+    spec = engine.specs[existing]
+    same_layout = (
+        sorted(kwargs.get("partition_by", [])) == sorted(spec.partition_by)
+        and sorted(kwargs.get("cluster_by", [])) == sorted(spec.cluster_by)
+        and bool(kwargs.get("versioned")) == bool(spec.versioned)
+        # table properties declare a new spec: a fresh table carries it
+        and set(kwargs) <= {"partition_by", "cluster_by", "versioned"}
+    )
+    # analyze the SELECT before ANY destructive/visible step —
+    # a statement that doesn't even resolve must leave the table
+    # byte-identical (ADVICE r12: failure atomicity)
+    df = sqltree.frame(engine.spark, plan.query())
+    if spec.versioned and same_layout:
+        # Delta's CREATE OR REPLACE on a same-layout versioned
+        # table: ONE 'rewrite' snapshot — the pre-replace state
+        # stays time-travelable. The new definition carries no
+        # constraints/expectations, so existing ones reset
+        # (Delta resets unspecified properties the same way) —
+        # but the reset is suspended IN MEMORY first and only
+        # persists after the overwrite commits: a failed replace
+        # must not strip a surviving table of its rules.
+        old_cons = dict(spec.constraints)
+        old_exp = dict(spec.expectations)
+        old_gen = dict(spec.generated)
+        spec.constraints.clear()
+        spec.expectations = {}
+        # generated formulas reset with the rest of the
+        # definition: keeping them (while their auto _gen_ CHECK
+        # was just cleared) would re-derive columns of the OLD
+        # definition — or crash when the new SELECT drops a
+        # formula source column (r13 review)
+        spec.generated = {}
+        try:
+            engine.overwrite(existing, df)
+        except BaseException:
+            spec.constraints.update(old_cons)
+            spec.expectations = old_exp
+            spec.generated = old_gen
+            raise
+        # keys survive the replace only while they still exist
+        # in the new definition — a spec advertising a dropped
+        # key column would fail later merges confusingly
+        # (ADVICE r12); deletion_vectors / zone_maps are layout
+        # properties of the (unchanged) storage and carry over.
+        newcols = {c.lower() for c in engine.table(existing).columns}
+        if spec.keys and not all(k.lower() in newcols for k in spec.keys):
+            spec.keys = []
+        # the replace IS a new declaration: positional INSERTs
+        # must map against the SELECT's column order, not the
+        # original CREATE's (r13 review — the staged-rename path
+        # gets this via create_table)
+        spec.declared_columns = list(df.columns)
+        engine._write_manifest(spec)
+        return "replace_table_as", existing
+    # layout/versioning changed: a fresh table under the name.
+    # Stage the new table under a temp name FIRST, then swap via
+    # one metadata rename — the statement may read the table it
+    # replaces (CREATE OR REPLACE t AS SELECT ... FROM t), which
+    # stays intact through the staging write, and any validation
+    # or write failure leaves it untouched.  No localCheckpoint
+    # pin: at 100 TB the staging write IS the materialization
+    # (VERDICT r12 perf weak + ADVICE r12 atomicity).
+    tmp = f"{raw}_replace_staging"
+    if _resolve(engine, tmp) is not None:
+        # could be crash residue from an interrupted replace OR a
+        # user table that happens to carry the staging suffix —
+        # never silently delete; make the operator decide
+        raise ValueError(
+            f"CREATE OR REPLACE {raw}: staging table {tmp} "
+            "already exists (crash residue from an interrupted "
+            f"replace, or a name collision); DROP TABLE {tmp} "
+            "first"
+        )
+    try:
+        engine.create_table(tmp, df, **kwargs)
+    except BaseException:
+        engine.drop_table(tmp, delete_files=True)
+        raise
+    engine.drop_table(existing, delete_files=True)
+    engine.rename_table(tmp, raw)
+    return "create_table_as", raw
+
+
+def _set_properties(engine, name: str, props: dict) -> DataFrame:
+    """``ALTER TABLE t SET TBLPROPERTIES (...)``: every pair is
+    validated before any is applied; n_affected counts the pairs."""
+    dv, auto = None, {}
+    for k, v in props.items():
+        prop, val = k.lower(), v.lower()
+        if prop in _AUTO_OPT:
+            if val in ("none", "null", "off"):
+                auto[prop.split(".", 1)[1]] = None
+            elif val.isdigit():
+                auto[prop.split(".", 1)[1]] = int(val)
+            else:
+                raise ValueError(
+                    f"ALTER TABLE {name}: {prop} must be an integer "
+                    "threshold or 'none'"
+                )
+        elif prop in ("deletion_vectors", "delta.enabledeletionvectors"):
+            if val not in ("true", "false"):
+                raise ValueError(
+                    f"ALTER TABLE {name}: {prop} must be true/false"
+                )
+            dv = val == "true"
+        else:
+            raise ValueError(
+                f"ALTER TABLE {name}: unsupported table property {prop!r} "
+                "(supported: 'deletion_vectors', "
+                "'auto_optimize.dv_sidecars', 'auto_optimize.write_dirs')"
+            )
+    spec = engine.specs[name]
+    with engine._lock(name):
+        if dv and not spec.versioned:
+            raise ValueError(
+                f"ALTER TABLE {name}: deletion_vectors requires a "
+                "versioned table"
+            )
+        if dv is False and spec.versioned:
+            store = engine._snapstore(name)
+            if store.versions() and (store.load().meta or {}).get("dv"):
+                raise ValueError(
+                    f"ALTER TABLE {name}: live deletion vectors exist; "
+                    "run OPTIMIZE (full compaction folds them in) "
+                    "before disabling"
+                )
+        if auto:
+            # set_auto_optimize validates the thresholds before it
+            # changes anything
+            cur = {**(spec.auto_optimize or {}), **auto}
+            engine.set_auto_optimize(
+                name,
+                dv_sidecars=cur.get("dv_sidecars"),
+                write_dirs=cur.get("write_dirs"),
+            )
+        if dv is not None:
+            spec.deletion_vectors = dv
+            if engine.root is not None and name not in engine._mem:
+                engine._write_manifest(spec)
+    return _status(engine, "set_tblproperties", name, len(props))
+
+
+def _show_create(engine, name: str) -> DataFrame:
+    """``SHOW CREATE TABLE t``: a CREATE statement that rebuilds the spec
+    (:func:`_create` reads it back).  A partitioned table's clustering
+    goes in TBLPROPERTIES, as Spark refuses PARTITIONED BY with CLUSTER
+    BY."""
+    spec = engine.specs[name]
+    # bucket_id is DERIVED on write (recomputed by _with_layout) —
+    # emitting it would make the round-tripped CREATE declare it
+    fields = [
+        f
+        for f in spec.declared_order(engine.table(name).schema)
+        if not (spec.bucket_by and f.name == _BUCKET_COL)
+    ]
+    cols = ",\n  ".join(
+        f"{f.name} {f.dataType.simpleString().upper()}" for f in fields
+    )
+    head = "CREATE VERSIONED TABLE" if spec.versioned else "CREATE TABLE"
+    stmt = f"{head} {name} (\n  {cols}\n)"
+    props: dict[str, str] = {}
+    if spec.partition_by:
+        stmt += f"\nPARTITIONED BY ({', '.join(spec.partition_by)})"
+        if spec.cluster_by:
+            props["cluster_by"] = ",".join(spec.cluster_by)
+    elif spec.cluster_by:
+        stmt += f"\nCLUSTER BY ({', '.join(spec.cluster_by)})"
+    if spec.keys:
+        props["keys"] = ",".join(spec.keys)
+    if spec.bucket_by:
+        props["bucket_by"] = ",".join(spec.bucket_by)
+        props["n_buckets"] = str(spec.n_buckets)
+    if spec.deletion_vectors:
+        props["deletion_vectors"] = "true"
+    if not spec.zone_maps:
+        props["zone_maps"] = "false"
+    if spec.compression != "snappy":
+        props["compression"] = spec.compression
+    if spec.format != "parquet":
+        props["format"] = spec.format
+    for gcol, gexpr in (spec.generated or {}).items():
+        props[f"generated.{gcol}"] = gexpr
+    for icol, d in (spec.identity or {}).items():
+        props[f"identity.{icol}"] = f"{d['start']},{d['step']}"
+    for cname, expr in (spec.constraints or {}).items():
+        if cname.startswith("_gen_") and cname[5:] in (spec.generated or {}):
+            continue  # derived from generated.* — re-created on parse
+        props[f"constraint.{cname}"] = expr
+    for ename, e in (spec.expectations or {}).items():
+        props[f"expectation.{ename}.{e['action']}"] = e["expr"]
+    for k, v in sorted((spec.auto_optimize or {}).items()):
+        props[f"auto_optimize.{k}"] = str(v)
+    if props:
+        # a Spark string literal: backslashes escape, quotes double
+        pairs = ", ".join(
+            "'{}'='{}'".format(
+                *(x.replace("\\", "\\\\").replace("'", "''") for x in kv)
+            )
+            for kv in props.items()
+        )
+        stmt += f"\nTBLPROPERTIES ({pairs})"
+    return engine.spark.createDataFrame([(stmt,)], "createtab_stmt string")
+
+
 def try_execute_dml(engine, query: str, plan) -> DataFrame | None:
     """Execute ``query`` if it is a DML, DDL or engine statement over a
     known engine table; return the status frame, or None for everything
     else.  ``plan`` is its parse tree from :func:`parse_statement` (None
-    when Spark's parser has no grammar for it): DELETE, UPDATE, INSERT
-    and MERGE route by plan node, every other statement by regex."""
+    when Spark's parser has no grammar for it): DML and DDL route by
+    plan node, the engine-only statements by regex."""
     kind = sqltree.kind(plan) if plan is not None else None
     if kind == "DeleteFromTable":
         name = _target(engine, plan)
@@ -792,20 +1123,29 @@ def try_execute_dml(engine, query: str, plan) -> DataFrame | None:
             # whose name happens to appear inside a formula's string
             # literal (SET mm with date_format(d, 'yyyy-MM')) must
             # neither trigger a recompute nor corrupt the literal
-            # (ADVICE r13 #2) — exprs.py skips quoted spans and
-            # function-call identifiers.
+            # (ADVICE r13 #2) — the formula's expression tree knows
+            # literals and function names from column references.
             subs = {c.lower(): e for c, e in set_pairs0}
             set_cols0 = {c for c, _ in set_pairs0}
             for gcol, gexpr in (spec.generated or {}).items():
                 if gcol.lower() in {c.lower() for c in set_cols0}:
                     continue
-                if subs and referenced_columns(gexpr, candidates=set_cols0):
+                if subs and sqltree.referenced_columns(
+                    engine.spark, gexpr, candidates=set_cols0
+                ):
                     # every SET expression sees PRE-update values (SQL
                     # semantics), so the formula must be evaluated over
                     # the NEW source values: substitute each SET column
                     # reference in the (trusted, table-declared) formula
                     # with its parenthesized SET expression
-                    pairs.append((gcol, substitute_columns(gexpr, subs)))
+                    pairs.append(
+                        (
+                            gcol,
+                            sqltree.substitute_columns(
+                                engine.spark, gexpr, subs
+                            ),
+                        )
+                    )
             parts = spec.physical_partitioning
             set_cols = {c for c, _ in pairs}
             if spec.bucket_by and _BUCKET_COL in set_cols:
@@ -890,7 +1230,7 @@ def try_execute_dml(engine, query: str, plan) -> DataFrame | None:
             name,
             stmt,
             sqltree.seq(plan.userSpecifiedCols()),
-            sqltree.text(query, plan.query()),
+            sqltree.frame(engine.spark, plan.query()),
         )
         n = df.count()
         if not plan.overwrite():
@@ -906,233 +1246,48 @@ def try_execute_dml(engine, query: str, plan) -> DataFrame | None:
     if kind == "MergeIntoTable":
         return _merge(engine, query, plan)
 
-    m = _CTAS.match(query)
-    if m:
-        raw = m.group(3)
-        replace = bool(m.group(1))
-        existing = _resolve(engine, raw)
-        if existing is not None and not replace:
-            raise ValueError(f"CREATE TABLE {raw}: table already exists")
-        kwargs = {}
-        if m.group(2):
-            kwargs["versioned"] = True
-        if m.group(4):
-            kwargs["partition_by"] = [
-                c.strip() for c in m.group(4).split(",") if c.strip()
-            ]
-        if m.group(5):
-            # CLUSTER BY (cols): clustered writes (zone-map tightness
-            # from ingest) — requires VERSIONED
-            kwargs["cluster_by"] = [
-                c.strip() for c in m.group(5).split(",") if c.strip()
-            ]
-        if existing is not None:
-            spec = engine.specs[existing]
-            same_layout = (
-                sorted(kwargs.get("partition_by", []))
-                == sorted(spec.partition_by)
-                and sorted(kwargs.get("cluster_by", []))
-                == sorted(spec.cluster_by)
-                and bool(kwargs.get("versioned")) == bool(spec.versioned)
-            )
-            # analyze the SELECT before ANY destructive/visible step —
-            # a statement that doesn't even resolve must leave the table
-            # byte-identical (ADVICE r12: failure atomicity)
-            df = engine.sql(m.group(6))
-            if spec.versioned and same_layout:
-                # Delta's CREATE OR REPLACE on a same-layout versioned
-                # table: ONE 'rewrite' snapshot — the pre-replace state
-                # stays time-travelable. The new definition carries no
-                # constraints/expectations, so existing ones reset
-                # (Delta resets unspecified properties the same way) —
-                # but the reset is suspended IN MEMORY first and only
-                # persists after the overwrite commits: a failed replace
-                # must not strip a surviving table of its rules.
-                old_cons = dict(spec.constraints)
-                old_exp = dict(spec.expectations)
-                old_gen = dict(spec.generated)
-                spec.constraints.clear()
-                spec.expectations = {}
-                # generated formulas reset with the rest of the
-                # definition: keeping them (while their auto _gen_ CHECK
-                # was just cleared) would re-derive columns of the OLD
-                # definition — or crash when the new SELECT drops a
-                # formula source column (r13 review)
-                spec.generated = {}
-                try:
-                    engine.overwrite(existing, df)
-                except BaseException:
-                    spec.constraints.update(old_cons)
-                    spec.expectations = old_exp
-                    spec.generated = old_gen
-                    raise
-                # keys survive the replace only while they still exist
-                # in the new definition — a spec advertising a dropped
-                # key column would fail later merges confusingly
-                # (ADVICE r12); deletion_vectors / zone_maps are layout
-                # properties of the (unchanged) storage and carry over.
-                newcols = {c.lower() for c in engine.table(existing).columns}
-                if spec.keys and not all(
-                    k.lower() in newcols for k in spec.keys
-                ):
-                    spec.keys = []
-                # the replace IS a new declaration: positional INSERTs
-                # must map against the SELECT's column order, not the
-                # original CREATE's (r13 review — the staged-rename path
-                # gets this via create_table)
-                spec.declared_columns = list(df.columns)
-                engine._write_manifest(spec)
-                n = engine.table(existing).count()
-                return _status(engine, "replace_table_as", existing, n)
-            # layout/versioning changed: a fresh table under the name.
-            # Stage the new table under a temp name FIRST, then swap via
-            # one metadata rename — the statement may read the table it
-            # replaces (CREATE OR REPLACE t AS SELECT ... FROM t), which
-            # stays intact through the staging write, and any validation
-            # or write failure leaves it untouched.  No localCheckpoint
-            # pin: at 100 TB the staging write IS the materialization
-            # (VERDICT r12 perf weak + ADVICE r12 atomicity).
-            tmp = f"{raw}_replace_staging"
-            if _resolve(engine, tmp) is not None:
-                # could be crash residue from an interrupted replace OR a
-                # user table that happens to carry the staging suffix —
-                # never silently delete; make the operator decide
-                raise ValueError(
-                    f"CREATE OR REPLACE {raw}: staging table {tmp} "
-                    "already exists (crash residue from an interrupted "
-                    f"replace, or a name collision); DROP TABLE {tmp} "
-                    "first"
-                )
-            try:
-                engine.create_table(tmp, df, **kwargs)
-            except BaseException:
-                engine.drop_table(tmp, delete_files=True)
-                raise
-            engine.drop_table(existing, delete_files=True)
-            engine.rename_table(tmp, raw)
-            n = engine.table(raw).count()
-            return _status(engine, "create_table_as", raw, n)
-        engine.create_table_as(raw, m.group(6), **kwargs)
-        n = engine.table(raw).count()
-        return _status(engine, "create_table_as", raw, n)
+    if kind in ("CreateTable", "CreateTableAsSelect", "ReplaceTableAsSelect"):
+        return _create(engine, query, plan)
 
-    m = _CREATE_TABLE.match(query)
-    if m:
-        # Literal CREATE [VERSIONED] TABLE t (col type, ...) [PARTITIONED
-        # BY (c)] — an EMPTY typed table through create_table (the other
-        # statement a first-time user types before any data exists). The
-        # column-defs text is a Spark DDL schema string, so types parse
-        # exactly as Spark would (decimal scales, nested types, NOT NULL).
-        raw = m.group(2)
-        if _resolve(engine, raw) is not None:
-            raise ValueError(f"CREATE TABLE {raw}: table already exists")
-        empty = engine.spark.createDataFrame([], m.group(3))
-        kwargs = {}
-        if m.group(1):
-            kwargs["versioned"] = True
-        if m.group(4):
-            kwargs["partition_by"] = [
-                c.strip() for c in m.group(4).split(",") if c.strip()
-            ]
-        if m.group(5):
-            kwargs["cluster_by"] = [
-                c.strip() for c in m.group(5).split(",") if c.strip()
-            ]
-        if m.group(6):
-            # TBLPROPERTIES pairs: the engine spec fields SHOW CREATE
-            # TABLE emits (round-trip), plus 'constraint.<name>' entries
-            constraints = {}
-            for k, v in _TBLPROP_PAIR.findall(m.group(6)):
-                k, v = k.replace("''", "'"), v.replace("''", "'")
-                lk = k.lower()
-                if lk.startswith("expectation."):
-                    # 'expectation.<name>.<drop|track|quarantine>' = '<expr>'
-                    body = k[len("expectation."):]
-                    ename, _, action = body.rpartition(".")
-                    if not ename or action.lower() not in (
-                        "drop", "track", "quarantine",
-                    ):
-                        raise ValueError(
-                            f"CREATE TABLE {raw}: expectation property "
-                            f"{k!r} must be "
-                            "'expectation.<name>.<drop|track|quarantine>'"
-                        )
-                    kwargs.setdefault("expectations", {})[ename] = {
-                        "expr": v,
-                        "action": action.lower(),
-                    }
-                elif lk.startswith("constraint."):
-                    constraints[k[len("constraint."):]] = v
-                elif lk.startswith("generated."):
-                    kwargs.setdefault("generated", {})[
-                        k[len("generated."):]
-                    ] = v
-                elif lk.startswith("identity."):
-                    # 'identity.<col>' = '<start>,<step>' (both optional)
-                    ps = [x.strip() for x in v.split(",")]
-                    kwargs.setdefault("identity", {})[
-                        k[len("identity."):]
-                    ] = {
-                        "start": int(ps[0]) if ps and ps[0] else 1,
-                        "step": int(ps[1]) if len(ps) > 1 and ps[1] else 1,
-                    }
-                elif lk in ("keys", "bucket_by"):
-                    kwargs[lk] = [c.strip() for c in v.split(",")]
-                elif lk == "n_buckets":
-                    kwargs[lk] = int(v)
-                elif lk in ("deletion_vectors", "zone_maps"):
-                    kwargs[lk] = v.lower() == "true"
-                elif lk in ("compression", "format"):
-                    kwargs[lk] = v
-                elif lk in (
-                    "auto_optimize.dv_sidecars",
-                    "auto_optimize.write_dirs",
-                ):
-                    if not v.isdigit():
-                        raise ValueError(
-                            f"CREATE TABLE {raw}: {k!r} must be an "
-                            "integer threshold"
-                        )
-                    kwargs.setdefault("_auto_optimize", {})[
-                        lk.split(".", 1)[1]
-                    ] = int(v)
-                else:
-                    raise ValueError(
-                        f"CREATE TABLE {raw}: unsupported table property "
-                        f"{k!r} (supported: {sorted(_CREATE_PROPS)} and "
-                        "'constraint.<name>' / 'generated.<col>' / "
-                        "'identity.<col>' / "
-                        "'expectation.<name>.<action>')"
-                    )
-            if constraints:
-                kwargs["constraints"] = constraints
-        auto_opt = kwargs.pop("_auto_optimize", None)
-        for c in kwargs.get("identity", {}):
-            # the column is DECLARED in the defs (with its type) but
-            # GENERATED ALWAYS: the engine assigns it as BIGINT
-            have = {x.lower(): x for x in empty.columns}
-            if c.lower() in have:
-                f = empty.schema[have[c.lower()]]
-                if f.dataType.simpleString() != "bigint":
-                    raise ValueError(
-                        f"CREATE TABLE {raw}: identity column {c!r} "
-                        f"must be BIGINT (got {f.dataType.simpleString()})"
-                    )
-                empty = empty.drop(have[c.lower()])
-        engine.create_table(raw, empty, **kwargs)
-        if auto_opt:
-            engine.set_auto_optimize(
-                raw,
-                dv_sidecars=auto_opt.get("dv_sidecars"),
-                write_dirs=auto_opt.get("write_dirs"),
-            )
-        return _status(engine, "create_table", raw, 0)
+    if plan is None:
+        return _engine_statement(engine, query)
 
-    m = _SHOW_PARTITIONS.match(query)
-    if m:
-        name = _resolve(engine, m.group(1))
-        if name is None:
-            return None  # let spark.sql answer for catalog tables
+    if kind == "ShowTables":
+        # SHOW TABLES IN <namespace> | LIKE <pattern> runs vanilla
+        if (
+            sqltree.kind(plan.namespace()) != "CurrentNamespace$"
+            or plan.pattern().isDefined()
+        ):
+            return None
+        rows = [
+            (
+                n,
+                s.format,
+                bool(s.versioned),
+                ",".join(s.partition_by),
+                bool(n in engine._mem),
+            )
+            for n, s in sorted(engine.specs.items())
+        ]
+        return engine.spark.createDataFrame(
+            rows,
+            "tableName string, format string, versioned boolean, "
+            "partitionedBy string, isTemporary boolean",
+        )
+
+    if kind not in _TABLE_DDL:
+        return None
+    table = sqltree.children(plan)[0]
+    if sqltree.kind(table) == "Filter":
+        # ADD CONSTRAINT's child checks the table's rows against the CHECK
+        table = table.child()
+    name = _resolve(engine, sqltree.name(table))
+    if name is None:
+        return None  # not an engine table: spark.sql answers
+
+    if kind == "ShowPartitions":
+        if plan.pattern().isDefined():
+            return None  # a PARTITION spec runs vanilla
         spec = engine.specs[name]
         parts = spec.physical_partitioning
         if not parts:
@@ -1173,14 +1328,8 @@ def try_execute_dml(engine, query: str, plan) -> DataFrame | None:
             "partition string, rows bigint",
         )
 
-    m = _DROP.match(query)
-    if m:
-        name = _resolve(engine, m.group(1))
-        if name is None:
-            # Not an engine table: fall through to spark.sql for BOTH
-            # forms — IF EXISTS never errors there, and a same-named
-            # Spark-catalog table must actually be dropped rather than
-            # silently surviving a synthesized success frame (ADVICE r5).
+    if kind == "DropTable":
+        if plan.purge():
             return None
         # delete_files=True: SQL DROP must be durable — without it the
         # manifest survives on disk and the table resurrects in the next
@@ -1188,6 +1337,324 @@ def try_execute_dml(engine, query: str, plan) -> DataFrame | None:
         engine.drop_table(name, delete_files=True)
         return _status(engine, "drop_table", name, 1)
 
+    if kind in ("AnalyzeTable", "AnalyzeColumn"):
+        if kind == "AnalyzeColumn":
+            if plan.allColumns():
+                return None
+            cols = sqltree.seq(plan.columnNames().get())
+        elif plan.partitionSpec().size() or plan.noScan():
+            return None
+        else:
+            cols = None
+        stats = engine.analyze_table(name, columns=cols)
+        return _status(engine, "analyze", name, int(stats.get("rows", 0)))
+
+    if kind == "TruncateTable":
+        with engine._lock(name):
+            t = engine.table(name)
+            # row count from parquet footers (driver-side metadata) —
+            # a full count() job under the table lock otherwise
+            n = engine.meta_row_count(name)
+            if n is None:
+                n = t.count()
+            # schema-preserving empty rewrite; versioned tables commit
+            # one snapshot, so the pre-truncate state time-travels
+            engine.overwrite(name, t.limit(0), allow_drop=False)
+        return _status(engine, "truncate", name, n)
+
+    if kind == "AlterTableClusterBy":
+        # Liquid-clustering re-declaration: future writes cluster on the
+        # new key; OPTIMIZE rewrites the existing files clustered.
+        # CLUSTER BY NONE parses to no spec.
+        specs = sqltree.seq(plan.clusterBySpec().toList())
+        cols = [
+            ".".join(r.fieldNames())
+            for s in specs
+            for r in sqltree.seq(s.columnNames())
+        ]
+        engine.set_cluster_by(name, cols)
+        return _status(engine, "alter_cluster_by", name, 0)
+
+    if kind == "SetTableProperties":
+        return _set_properties(engine, name, _props(plan.properties()))
+
+    if kind == "AddCheckConstraint":
+        check = plan.checkConstraint()
+        c = check.userProvidedCharacteristic()
+        if c.enforced().isDefined() or c.rely().isDefined():
+            return None
+        engine.add_constraint(
+            name, check.name(), sqltree.text(query, check.child())
+        )
+        return _status(engine, "alter_add_constraint", name, 0)
+
+    if kind == "DropConstraint":
+        if plan.cascade():
+            return None
+        cname = plan.name()
+        if not plan.ifExists() and cname not in engine.specs[name].constraints:
+            raise ValueError(
+                f"ALTER TABLE {name}: no constraint {cname!r} "
+                "(use DROP CONSTRAINT IF EXISTS)"
+            )
+        engine.drop_constraint(name, cname)
+        return _status(engine, "alter_drop_constraint", name, 0)
+
+    if kind == "AddColumns":
+        added = sqltree.seq(plan.columnsToAdd())
+        if len(added) != 1:
+            raise ValueError(
+                f"ALTER TABLE {name}: one ADD COLUMN per statement "
+                f"(got {[c.colName() for c in added]})"
+            )
+        c = added[0]
+        # a nested path, a position, a DEFAULT, a COMMENT or NOT NULL
+        # runs vanilla
+        if (
+            c.path().isDefined()
+            or c.position().isDefined()
+            or c.default().isDefined()
+            or c.comment().isDefined()
+            or not c.nullable()
+        ):
+            return None
+        col, coltype = c.colName(), c.dataType().catalogString()
+        # Versioned parquet tables: METADATA-ONLY add (Delta
+        # column-mapping analog, engine.add_column) — one snapshot
+        # commit, no NULL-filled rewrite, n_affected 0 rows touched.
+        if _metadata_ddl_ok(engine, name):
+            engine.add_column(name, col, coltype)
+            return _status(engine, "alter_add_column", name, 0)
+        # Same read-count-overwrite TOCTOU discipline as DELETE/UPDATE:
+        # the whole sequence holds the (reentrant) table lock, or a
+        # concurrent insert between the read and the rewrite would be
+        # silently dropped (r6 review finding).
+        with engine._lock(name):
+            t = engine.table(name)
+            if col.lower() in {c.lower() for c in t.columns}:
+                raise ValueError(f"ALTER TABLE {name}: column {col!r} exists")
+            # NULL-filled rewrite: plain UNVERSIONED parquet cannot do
+            # Delta's metadata-only add (old files would lack the column
+            # and the mixed-directory scan drifts — no snapshot to hang
+            # the event log on).
+            n = t.count()
+            engine.overwrite(
+                name,
+                t.withColumn(col, F.lit(None).cast(coltype)),
+                allow_drop=False,
+            )
+        return _status(engine, "alter_add_column", name, n)
+
+    if kind == "DropColumns":
+        if plan.ifExists():
+            return None
+        cols = [sqltree.name(f) for f in sqltree.seq(plan.columnsToDrop())]
+        # Versioned parquet tables: METADATA-ONLY drop (engine.
+        # drop_columns) — data files keep the bytes, reads prune per
+        # write dir, a later same-name re-add reads NULL from old files.
+        if _metadata_ddl_ok(engine, name):
+            engine.drop_columns(name, cols)
+            return _status(engine, "alter_drop_column", name, 0)
+        spec = engine.specs[name]
+        with engine._lock(name):
+            t = engine.table(name)
+            have = {c.lower(): c for c in t.columns}
+            missing = [c for c in cols if c.lower() not in have]
+            if missing:
+                raise ValueError(
+                    f"ALTER TABLE {name}: no columns {missing}"
+                )
+            doomed = {have[c.lower()] for c in cols}
+            engine._column_ddl_guard(spec, doomed, "DROP COLUMN")
+            if len(doomed) == len(t.columns):
+                raise ValueError(
+                    f"ALTER TABLE {name}: cannot drop every column"
+                )
+            n = t.count()
+            # spec hygiene: dropped columns must leave bloom sizing and
+            # persisted column stats too, or the manifest carries phantom
+            # entries that mis-size a later re-added column's bloom
+            # filter (r7 review finding). Rolled back on a failed write,
+            # same discipline as RENAME.
+            old_blooms = dict(spec.bloom_filter_cols)
+            old_stats = spec.stats
+            for c in doomed:
+                spec.bloom_filter_cols.pop(c, None)
+            if spec.stats and spec.stats.get("columns"):
+                spec.stats = {
+                    **spec.stats,
+                    "columns": {
+                        k: v
+                        for k, v in spec.stats["columns"].items()
+                        if k not in doomed
+                    },
+                }
+            try:
+                engine.overwrite(name, t.drop(*doomed), allow_drop=False)
+            except Exception:
+                spec.bloom_filter_cols = old_blooms
+                spec.stats = old_stats
+                raise
+        return _status(engine, "alter_drop_column", name, n)
+
+    if kind == "AlterColumns":
+        # ALTER TABLE t ALTER COLUMN c TYPE <type> — order-preserving
+        # WIDENINGS only (Delta type-widening analog).  Versioned
+        # parquet: metadata-only (engine.alter_column_type — era files
+        # and zone-map stats stay valid; reads conform the type up).
+        # Unversioned: cast rewrite, same widening rule so semantics
+        # don't depend on the storage tier.  Any other column change
+        # (nullability, comment, position, default) runs vanilla.
+        specs = sqltree.seq(plan.specs())
+        s = specs[0]
+        if (
+            len(specs) != 1
+            or not s.newDataType().isDefined()
+            or s.newNullability().isDefined()
+            or s.newComment().isDefined()
+            or s.newPosition().isDefined()
+            or s.newDefaultExpression().isDefined()
+            or s.dropDefault()
+        ):
+            return None
+        col = sqltree.name(s.column())
+        newtype = s.newDataType().get().catalogString()
+        if _metadata_ddl_ok(engine, name):
+            engine.alter_column_type(name, col, newtype)
+            return _status(engine, "alter_column_type", name, 0)
+        from polars_lake_spark.engine import Engine as _E
+
+        with engine._lock(name):
+            t = engine.table(name)
+            have = {c.lower(): c for c in t.columns}
+            if col.lower() not in have:
+                raise ValueError(f"ALTER TABLE {name}: no column {col!r}")
+            col = have[col.lower()]
+            frm = t.schema[col].dataType.jsonValue()
+            to = (
+                engine.spark.createDataFrame([], f"`{col}` {newtype}")
+                .schema.fields[0].dataType.jsonValue()
+            )
+            frm_s = frm if isinstance(frm, str) else None
+            to_s = to if isinstance(to, str) else None
+            if frm == to:
+                return _status(engine, "alter_column_type", name, 0)
+            if not (frm_s and to_s and _E._is_widening(frm_s, to_s)):
+                raise ValueError(
+                    f"ALTER TABLE {name}: {col!r} {frm} → {to} is not an "
+                    "order-preserving widening; rewrite the table to "
+                    "change types"
+                )
+            spec = engine.specs[name]
+            if col in set(spec.partition_by) | set(spec.bucket_by):
+                raise ValueError(
+                    f"ALTER TABLE {name}: cannot widen layout "
+                    f"(partition/bucket) column {col!r}"
+                )
+            n = t.count()
+            engine.overwrite(
+                name,
+                t.withColumn(col, F.col(col).cast(newtype)),
+                allow_drop=False,
+            )
+        return _status(engine, "alter_column_type", name, n)
+
+    if kind == "RenameTable":
+        # ALTER TABLE t RENAME TO u — one metadata move (engine.
+        # rename_table): snapshots/zone maps/DVs travel with the dir,
+        # O(1) at any size
+        if plan.isView():
+            return None
+        new = ".".join(sqltree.seq(plan.newName()))
+        engine.rename_table(name, new)
+        return _status(engine, "rename_table", new, 0)
+
+    if kind == "RenameColumn":
+        old_c, new_c = sqltree.name(plan.column()), plan.newName()
+        # Versioned parquet tables: METADATA-ONLY rename (engine.
+        # rename_column) — one snapshot commit; old files keep era names,
+        # reads and zone-map probes translate per write dir.
+        if _metadata_ddl_ok(engine, name):
+            engine.rename_column(name, old_c, new_c)
+            return _status(engine, "alter_rename_column", name, 0)
+        spec = engine.specs[name]
+        with engine._lock(name):
+            t = engine.table(name)
+            have = {c.lower(): c for c in t.columns}
+            if old_c.lower() not in have:
+                raise ValueError(f"ALTER TABLE {name}: no column {old_c!r}")
+            if new_c.lower() in have:
+                raise ValueError(f"ALTER TABLE {name}: column {new_c!r} exists")
+            old_c = have[old_c.lower()]
+            engine._column_ddl_guard(
+                spec, {old_c}, "RENAME COLUMN", keys_ok=True
+            )
+            n = t.count()
+            # keys may rename with the column (row identity is unchanged);
+            # layout columns may not (old snapshots' dir names would stop
+            # matching the spec — guarded above). Bloom sizing renames
+            # BEFORE the write (the written frame carries the new name);
+            # if the write then fails, both spec edits roll back so the
+            # manifest never drifts from the data.
+            old_keys = list(spec.keys)
+            old_blooms = dict(spec.bloom_filter_cols)
+            old_stats = spec.stats
+            old_declared = list(spec.declared_columns)
+            spec.keys = [new_c if k == old_c else k for k in spec.keys]
+            # declared order must follow the rename too, or the column
+            # falls OUT of the declaration and declared_order() moves it
+            # to the end — silently changing positional INSERT mapping.
+            spec.declared_columns = [
+                new_c if c.lower() == old_c.lower() else c
+                for c in spec.declared_columns
+            ]
+            if old_c in spec.bloom_filter_cols:
+                spec.bloom_filter_cols[new_c] = spec.bloom_filter_cols.pop(old_c)
+            if spec.stats and old_c in (spec.stats.get("columns") or {}):
+                cols_stats = dict(spec.stats["columns"])
+                cols_stats[new_c] = cols_stats.pop(old_c)
+                spec.stats = {**spec.stats, "columns": cols_stats}
+            try:
+                engine.overwrite(
+                    name,
+                    t.withColumnRenamed(old_c, new_c),
+                    allow_drop=False,
+                )
+            except Exception:
+                spec.keys, spec.bloom_filter_cols = old_keys, old_blooms
+                spec.stats = old_stats
+                spec.declared_columns = old_declared
+                raise
+        return _status(engine, "alter_rename_column", name, n)
+
+    if kind == "ShowCreateTable":
+        return None if plan.asSerde() else _show_create(engine, name)
+
+    # DescribeRelation: EXTENDED or a PARTITION spec runs vanilla
+    if plan.isExtended() or plan.partitionSpec().size():
+        return None
+    spec = engine.specs[name]
+    marks = {}
+    for c in spec.partition_by:
+        marks[c] = "partition column"
+    for c in spec.bucket_by:
+        marks[c] = marks.get(c, "") or "bucket source column"
+    for c in spec.cluster_by:
+        marks[c] = marks.get(c, "") or "cluster column"
+    for c in spec.keys:
+        marks[c] = (marks.get(c, "") + " key").strip()
+    rows = [
+        (c, dt, marks.get(c))
+        for c, dt in engine.table(name).dtypes
+    ]
+    return engine.spark.createDataFrame(
+        rows, "col_name string, data_type string, comment string"
+    )
+
+
+def _engine_statement(engine, query: str) -> DataFrame | None:
+    """The engine-only statements, matched by regex (Spark's parser has
+    no grammar for them); None for anything else."""
     m = _APPLY_CHANGES.match(query)
     if m:
         # APPLY CHANGES INTO t FROM src|(<select>) [KEYS (k, ...)]
@@ -1267,19 +1734,6 @@ def try_execute_dml(engine, query: str, plan) -> DataFrame | None:
             )
         return _status(engine, "apply_changes", name, n)
 
-    m = _ANALYZE.match(query)
-    if m:
-        name = _resolve(engine, m.group(1))
-        if name is None:
-            return None
-        cols = (
-            [c.strip() for c in m.group(2).split(",") if c.strip()]
-            if m.group(2)
-            else None
-        )
-        stats = engine.analyze_table(name, columns=cols)
-        return _status(engine, "analyze", name, int(stats.get("rows", 0)))
-
     m = _VACUUM.match(query)
     if m:
         name = _resolve(engine, m.group(1))
@@ -1311,23 +1765,6 @@ def try_execute_dml(engine, query: str, plan) -> DataFrame | None:
         # metadata — compact() does the counting since it owns the scope.
         nfiles = engine.compact(name, zorder_by=zcols, where=where)
         return _status(engine, "optimize", name, nfiles)
-
-    m = _TRUNCATE.match(query)
-    if m:
-        name = _resolve(engine, m.group(1))
-        if name is None:
-            return None
-        with engine._lock(name):
-            t = engine.table(name)
-            # row count from parquet footers (driver-side metadata) —
-            # a full count() job under the table lock otherwise
-            n = engine.meta_row_count(name)
-            if n is None:
-                n = t.count()
-            # schema-preserving empty rewrite; versioned tables commit
-            # one snapshot, so the pre-truncate state time-travels
-            engine.overwrite(name, t.limit(0), allow_drop=False)
-        return _status(engine, "truncate", name, n)
 
     m = _COPY_INTO.match(query)
     if m:
@@ -1452,370 +1889,27 @@ def try_execute_dml(engine, query: str, plan) -> DataFrame | None:
         engine.convert_to_versioned(name)
         return _status(engine, "convert_to_versioned", name, 0)
 
-    m = _ALTER_CLUSTER.match(query)
-    if m:
-        # Liquid-clustering re-declaration: future writes cluster on the
-        # new key; OPTIMIZE rewrites the existing files clustered.
-        name = _resolve(engine, m.group(1))
-        if name is None:
-            return None
-        cols = (
-            []
-            if m.group(3)
-            else [c.strip() for c in m.group(2).split(",") if c.strip()]
-        )
-        engine.set_cluster_by(name, cols)
-        return _status(engine, "alter_cluster_by", name, 0)
-
-    m = _SET_TBLPROPERTIES.match(query)
-    if m:
-        name = _resolve(engine, m.group(1))
-        if name is None:
-            return None  # let spark.sql handle catalog tables
-        prop, val = m.group(2).lower(), m.group(3).lower()
-        if prop in ("auto_optimize.dv_sidecars", "auto_optimize.write_dirs"):
-            spec = engine.specs[name]
-            cur = dict(spec.auto_optimize or {})
-            key = prop.split(".", 1)[1]
-            if val in ("none", "null", "off"):
-                cur.pop(key, None)
-            elif val.isdigit():
-                cur[key] = int(val)
-            else:
-                raise ValueError(
-                    f"ALTER TABLE {name}: {prop} must be an integer "
-                    "threshold or 'none'"
-                )
-            engine.set_auto_optimize(
-                name,
-                dv_sidecars=cur.get("dv_sidecars"),
-                write_dirs=cur.get("write_dirs"),
-            )
-            return _status(
-                engine, "set_tblproperties", name, cur.get(key, 0)
-            )
-        if prop not in ("deletion_vectors", "delta.enabledeletionvectors"):
-            raise ValueError(
-                f"ALTER TABLE {name}: unsupported table property {prop!r} "
-                "(supported: 'deletion_vectors', "
-                "'auto_optimize.dv_sidecars', 'auto_optimize.write_dirs')"
-            )
-        if val not in ("true", "false"):
-            raise ValueError(f"ALTER TABLE {name}: {prop} must be true/false")
-        enable = val == "true"
-        spec = engine.specs[name]
-        with engine._lock(name):
-            if enable and not spec.versioned:
-                raise ValueError(
-                    f"ALTER TABLE {name}: deletion_vectors requires a "
-                    "versioned table"
-                )
-            if not enable and spec.versioned:
-                store = engine._snapstore(name)
-                if store.versions() and (store.load().meta or {}).get("dv"):
-                    raise ValueError(
-                        f"ALTER TABLE {name}: live deletion vectors exist; "
-                        "run OPTIMIZE (full compaction folds them in) "
-                        "before disabling"
-                    )
-            spec.deletion_vectors = enable
-            if engine.root is not None and name not in engine._mem:
-                engine._write_manifest(spec)
-        return _status(engine, "set_tblproperties", name, int(enable))
-
-    m = _ALTER_ADD_CONSTRAINT.match(query)
+    m = _RESTORE.match(query)
     if m:
         name = _resolve(engine, m.group(1))
         if name is None:
             return None
-        engine.add_constraint(name, m.group(2), m.group(3).strip())
-        return _status(engine, "alter_add_constraint", name, 0)
+        if m.group(2) is not None:
+            version = int(m.group(2))
+        else:
+            # TIMESTAMP AS OF: latest snapshot at or before the instant
+            # (the same resolution time travel uses)
+            version = _version_at_timestamp(engine, name, m.group(3))
+        engine.restore(name, version)
+        return _status(engine, "restore", name, 0)
 
-    m = _ALTER_DROP_CONSTRAINT.match(query)
-    if m:
-        name = _resolve(engine, m.group(1))
-        if name is None:
-            return None
-        cname = m.group(3)
-        if not m.group(2) and cname not in engine.specs[name].constraints:
-            raise ValueError(
-                f"ALTER TABLE {name}: no constraint {cname!r} "
-                "(use DROP CONSTRAINT IF EXISTS)"
-            )
-        engine.drop_constraint(name, cname)
-        return _status(engine, "alter_drop_constraint", name, 0)
-
-    m = _ALTER_ADD_COLUMN.match(query)
-    if m:
-        name = _resolve(engine, m.group(1))
-        if name is None:
-            return None
-        body = m.group(2).strip()
-        # Strip ONE wrapping paren pair only when it encloses the whole
-        # body — "(c int)" unwraps, "c decimal(10,2)" must keep its
-        # type's own parens (a blind \(...\)? regex chopped them off and
-        # produced an unbalanced type string — r6 review finding).
-        if body.startswith("("):
-            depth = 0
-            for i, ch in enumerate(body):
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                    if depth == 0:
-                        if i == len(body) - 1:
-                            body = body[1:-1].strip()
-                        break
-        cm = re.fullmatch(r"([A-Za-z_]\w*)\s+(.+)", body, re.S)
-        if not cm:
-            raise ValueError(
-                f"ALTER TABLE {name}: cannot parse ADD COLUMN {body!r}"
-            )
-        col, coltype = cm.group(1), cm.group(2).strip()
-        # A top-level comma in the captured type means a multi-column ADD
-        # COLUMNS (a int, b int) — reject loudly rather than let the
-        # second column be swallowed into the first's type string.
-        # (Commas inside decimal(10,2) / map<string,int> are fine.)
-        depth = 0
-        for ch in coltype:
-            if ch in "(<":
-                depth += 1
-            elif ch in ")>":
-                depth -= 1
-            elif ch == "," and depth == 0:
-                raise ValueError(
-                    f"ALTER TABLE {name}: one ADD COLUMN per statement "
-                    f"(got {coltype!r})"
-                )
-        # Versioned parquet tables: METADATA-ONLY add (Delta
-        # column-mapping analog, engine.add_column) — one snapshot
-        # commit, no NULL-filled rewrite, n_affected 0 rows touched.
-        if _metadata_ddl_ok(engine, name):
-            engine.add_column(name, col, coltype)
-            return _status(engine, "alter_add_column", name, 0)
-        # Same read-count-overwrite TOCTOU discipline as DELETE/UPDATE:
-        # the whole sequence holds the (reentrant) table lock, or a
-        # concurrent insert between the read and the rewrite would be
-        # silently dropped (r6 review finding).
-        with engine._lock(name):
-            t = engine.table(name)
-            if col.lower() in {c.lower() for c in t.columns}:
-                raise ValueError(f"ALTER TABLE {name}: column {col!r} exists")
-            # NULL-filled rewrite: plain UNVERSIONED parquet cannot do
-            # Delta's metadata-only add (old files would lack the column
-            # and the mixed-directory scan drifts — no snapshot to hang
-            # the event log on).
-            n = t.count()
-            engine.overwrite(
-                name,
-                t.withColumn(col, F.lit(None).cast(coltype)),
-                allow_drop=False,
-            )
-        return _status(engine, "alter_add_column", name, n)
-
-    m = _ALTER_DROP_COLUMN.match(query)
-    if m:
-        name = _resolve(engine, m.group(1))
-        if name is None:
-            return None
-        cols = [
-            c.strip() for c in (m.group(2) or m.group(3)).split(",") if c.strip()
-        ]
-        # Versioned parquet tables: METADATA-ONLY drop (engine.
-        # drop_columns) — data files keep the bytes, reads prune per
-        # write dir, a later same-name re-add reads NULL from old files.
-        if _metadata_ddl_ok(engine, name):
-            engine.drop_columns(name, cols)
-            return _status(engine, "alter_drop_column", name, 0)
-        spec = engine.specs[name]
-        with engine._lock(name):
-            t = engine.table(name)
-            have = {c.lower(): c for c in t.columns}
-            missing = [c for c in cols if c.lower() not in have]
-            if missing:
-                raise ValueError(
-                    f"ALTER TABLE {name}: no columns {missing}"
-                )
-            doomed = {have[c.lower()] for c in cols}
-            engine._column_ddl_guard(spec, doomed, "DROP COLUMN")
-            if len(doomed) == len(t.columns):
-                raise ValueError(
-                    f"ALTER TABLE {name}: cannot drop every column"
-                )
-            n = t.count()
-            # spec hygiene: dropped columns must leave bloom sizing and
-            # persisted column stats too, or the manifest carries phantom
-            # entries that mis-size a later re-added column's bloom
-            # filter (r7 review finding). Rolled back on a failed write,
-            # same discipline as RENAME.
-            old_blooms = dict(spec.bloom_filter_cols)
-            old_stats = spec.stats
-            for c in doomed:
-                spec.bloom_filter_cols.pop(c, None)
-            if spec.stats and spec.stats.get("columns"):
-                spec.stats = {
-                    **spec.stats,
-                    "columns": {
-                        k: v
-                        for k, v in spec.stats["columns"].items()
-                        if k not in doomed
-                    },
-                }
-            try:
-                engine.overwrite(name, t.drop(*doomed), allow_drop=False)
-            except Exception:
-                spec.bloom_filter_cols = old_blooms
-                spec.stats = old_stats
-                raise
-        return _status(engine, "alter_drop_column", name, n)
-
-    m = _ALTER_COLUMN_TYPE.match(query)
-    if m:
-        # ALTER TABLE t ALTER COLUMN c TYPE <type> — order-preserving
-        # WIDENINGS only (Delta type-widening analog).  Versioned
-        # parquet: metadata-only (engine.alter_column_type — era files
-        # and zone-map stats stay valid; reads conform the type up).
-        # Unversioned: cast rewrite, same widening rule so semantics
-        # don't depend on the storage tier.
-        name = _resolve(engine, m.group(1))
-        if name is None:
-            return None
-        col, newtype = m.group(2), m.group(3).strip()
-        if _metadata_ddl_ok(engine, name):
-            engine.alter_column_type(name, col, newtype)
-            return _status(engine, "alter_column_type", name, 0)
-        from polars_lake_spark.engine import Engine as _E
-
-        with engine._lock(name):
-            t = engine.table(name)
-            have = {c.lower(): c for c in t.columns}
-            if col.lower() not in have:
-                raise ValueError(f"ALTER TABLE {name}: no column {col!r}")
-            col = have[col.lower()]
-            frm = t.schema[col].dataType.jsonValue()
-            to = (
-                engine.spark.createDataFrame([], f"`{col}` {newtype}")
-                .schema.fields[0].dataType.jsonValue()
-            )
-            frm_s = frm if isinstance(frm, str) else None
-            to_s = to if isinstance(to, str) else None
-            if frm == to:
-                return _status(engine, "alter_column_type", name, 0)
-            if not (frm_s and to_s and _E._is_widening(frm_s, to_s)):
-                raise ValueError(
-                    f"ALTER TABLE {name}: {col!r} {frm} → {to} is not an "
-                    "order-preserving widening; rewrite the table to "
-                    "change types"
-                )
-            spec = engine.specs[name]
-            if col in set(spec.partition_by) | set(spec.bucket_by):
-                raise ValueError(
-                    f"ALTER TABLE {name}: cannot widen layout "
-                    f"(partition/bucket) column {col!r}"
-                )
-            n = t.count()
-            engine.overwrite(
-                name,
-                t.withColumn(col, F.col(col).cast(newtype)),
-                allow_drop=False,
-            )
-        return _status(engine, "alter_column_type", name, n)
-
-    m = _ALTER_RENAME_TABLE.match(query)
-    if m:
-        # ALTER TABLE t RENAME TO u — one metadata move (engine.
-        # rename_table): snapshots/zone maps/DVs travel with the dir,
-        # O(1) at any size
-        name = _resolve(engine, m.group(1))
-        if name is None:
-            return None
-        engine.rename_table(name, m.group(2))
-        return _status(engine, "rename_table", m.group(2), 0)
-
-    m = _ALTER_RENAME_COLUMN.match(query)
-    if m:
-        name = _resolve(engine, m.group(1))
-        if name is None:
-            return None
-        old_c, new_c = m.group(2), m.group(3)
-        # Versioned parquet tables: METADATA-ONLY rename (engine.
-        # rename_column) — one snapshot commit; old files keep era names,
-        # reads and zone-map probes translate per write dir.
-        if _metadata_ddl_ok(engine, name):
-            engine.rename_column(name, old_c, new_c)
-            return _status(engine, "alter_rename_column", name, 0)
-        spec = engine.specs[name]
-        with engine._lock(name):
-            t = engine.table(name)
-            have = {c.lower(): c for c in t.columns}
-            if old_c.lower() not in have:
-                raise ValueError(f"ALTER TABLE {name}: no column {old_c!r}")
-            if new_c.lower() in have:
-                raise ValueError(f"ALTER TABLE {name}: column {new_c!r} exists")
-            old_c = have[old_c.lower()]
-            engine._column_ddl_guard(
-                spec, {old_c}, "RENAME COLUMN", keys_ok=True
-            )
-            n = t.count()
-            # keys may rename with the column (row identity is unchanged);
-            # layout columns may not (old snapshots' dir names would stop
-            # matching the spec — guarded above). Bloom sizing renames
-            # BEFORE the write (the written frame carries the new name);
-            # if the write then fails, both spec edits roll back so the
-            # manifest never drifts from the data.
-            old_keys = list(spec.keys)
-            old_blooms = dict(spec.bloom_filter_cols)
-            old_stats = spec.stats
-            old_declared = list(spec.declared_columns)
-            spec.keys = [new_c if k == old_c else k for k in spec.keys]
-            # declared order must follow the rename too, or the column
-            # falls OUT of the declaration and declared_order() moves it
-            # to the end — silently changing positional INSERT mapping.
-            spec.declared_columns = [
-                new_c if c.lower() == old_c.lower() else c
-                for c in spec.declared_columns
-            ]
-            if old_c in spec.bloom_filter_cols:
-                spec.bloom_filter_cols[new_c] = spec.bloom_filter_cols.pop(old_c)
-            if spec.stats and old_c in (spec.stats.get("columns") or {}):
-                cols_stats = dict(spec.stats["columns"])
-                cols_stats[new_c] = cols_stats.pop(old_c)
-                spec.stats = {**spec.stats, "columns": cols_stats}
-            try:
-                engine.overwrite(
-                    name,
-                    t.withColumnRenamed(old_c, new_c),
-                    allow_drop=False,
-                )
-            except Exception:
-                spec.keys, spec.bloom_filter_cols = old_keys, old_blooms
-                spec.stats = old_stats
-                spec.declared_columns = old_declared
-                raise
-        return _status(engine, "alter_rename_column", name, n)
-
-    if _SHOW_TABLES.match(query):
-        rows = [
-            (
-                n,
-                s.format,
-                bool(s.versioned),
-                ",".join(s.partition_by),
-                bool(n in engine._mem),
-            )
-            for n, s in sorted(engine.specs.items())
-        ]
-        return engine.spark.createDataFrame(
-            rows,
-            "tableName string, format string, versioned boolean, "
-            "partitionedBy string, isTemporary boolean",
-        )
-
-    m = _DESCRIBE_HISTORY.match(query)
-    if m:
-        name = _resolve(engine, m.group(1))
-        if name is None:
-            return None
+    m = _DESCRIBE_META.match(query)
+    if m is None:
+        return None
+    name = _resolve(engine, m.group(2))
+    if name is None:
+        return None
+    if m.group(1).upper() == "HISTORY":
         rows = [
             (
                 h["version"],
@@ -1835,138 +1929,31 @@ def try_execute_dml(engine, query: str, plan) -> DataFrame | None:
             "timestamp_micros(ts_us) AS timestamp",
             "n_partitions",
         )
-
-    m = _RESTORE.match(query)
-    if m:
-        name = _resolve(engine, m.group(1))
-        if name is None:
-            return None
-        if m.group(2) is not None:
-            version = int(m.group(2))
-        else:
-            # TIMESTAMP AS OF: latest snapshot at or before the instant
-            # (the same resolution time travel uses)
-            version = _version_at_timestamp(engine, name, m.group(3))
-        engine.restore(name, version)
-        return _status(engine, "restore", name, 0)
-
-    m = _SHOW_CREATE.match(query)
-    if m:
-        name = _resolve(engine, m.group(1))
-        if name is None:
-            return None  # not an engine table — let spark.sql handle it
-        spec = engine.specs[name]
-        from polars_lake_spark.layout import BUCKET_COL
-
-        # bucket_id is DERIVED on write (recomputed by _with_layout) —
-        # emitting it would make the round-tripped CREATE declare it
-        fields = [
-            f
-            for f in spec.declared_order(engine.table(name).schema)
-            if not (spec.bucket_by and f.name == BUCKET_COL)
-        ]
-        cols = ",\n  ".join(
-            f"{f.name} {f.dataType.simpleString().upper()}" for f in fields
-        )
-        head = "CREATE VERSIONED TABLE" if spec.versioned else "CREATE TABLE"
-        stmt = f"{head} {name} (\n  {cols}\n)"
-        if spec.partition_by:
-            stmt += f"\nPARTITIONED BY ({', '.join(spec.partition_by)})"
-        if spec.cluster_by:
-            stmt += f"\nCLUSTER BY ({', '.join(spec.cluster_by)})"
-        props: dict[str, str] = {}
-        if spec.keys:
-            props["keys"] = ",".join(spec.keys)
-        if spec.bucket_by:
-            props["bucket_by"] = ",".join(spec.bucket_by)
-            props["n_buckets"] = str(spec.n_buckets)
-        if spec.deletion_vectors:
-            props["deletion_vectors"] = "true"
-        if not spec.zone_maps:
-            props["zone_maps"] = "false"
-        if spec.compression != "snappy":
-            props["compression"] = spec.compression
-        if spec.format != "parquet":
-            props["format"] = spec.format
-        for gcol, gexpr in (spec.generated or {}).items():
-            props[f"generated.{gcol}"] = gexpr
-        for icol, d in (spec.identity or {}).items():
-            props[f"identity.{icol}"] = f"{d['start']},{d['step']}"
-        for cname, expr in (spec.constraints or {}).items():
-            if cname.startswith("_gen_") and cname[5:] in (
-                spec.generated or {}
-            ):
-                continue  # derived from generated.* — re-created on parse
-            props[f"constraint.{cname}"] = expr
-        for ename, e in (spec.expectations or {}).items():
-            props[f"expectation.{ename}.{e['action']}"] = e["expr"]
-        for k, v in sorted((spec.auto_optimize or {}).items()):
-            props[f"auto_optimize.{k}"] = str(v)
-        if props:
-            pairs = ", ".join(
-                f"'{k}'='{v.replace(chr(39), chr(39) * 2)}'"
-                for k, v in props.items()
+    # Delta's DESCRIBE DETAIL: one row of physical-layout facts, all
+    # from METADATA (fragmentation_report + the spec/snapshot) — no
+    # scan. The numbers an operator reads before deciding on
+    # OPTIMIZE / compact_dvs / CONVERT.
+    spec = engine.specs[name]
+    fr = engine.fragmentation_report(name)
+    return engine.spark.createDataFrame(
+        [
+            (
+                name,
+                spec.format,
+                spec.versioned,
+                fr["files"],
+                fr["bytes_total"],
+                fr["small_files"],
+                fr["write_dirs"],
+                fr["dv_sidecars"],
+                fr["dv_rows"],
+                ",".join(spec.partition_by) or None,
+                ",".join(spec.cluster_by) or None,
+                fr["recommend"],
             )
-            stmt += f"\nTBLPROPERTIES ({pairs})"
-        return engine.spark.createDataFrame(
-            [(stmt,)], "createtab_stmt string"
-        )
-
-    m = _DESCRIBE_DETAIL.match(query)
-    if m:
-        # Delta's DESCRIBE DETAIL: one row of physical-layout facts, all
-        # from METADATA (fragmentation_report + the spec/snapshot) — no
-        # scan. The numbers an operator reads before deciding on
-        # OPTIMIZE / compact_dvs / CONVERT.
-        name = _resolve(engine, m.group(1))
-        if name is None:
-            return None
-        spec = engine.specs[name]
-        fr = engine.fragmentation_report(name)
-        return engine.spark.createDataFrame(
-            [
-                (
-                    name,
-                    spec.format,
-                    spec.versioned,
-                    fr["files"],
-                    fr["bytes_total"],
-                    fr["small_files"],
-                    fr["write_dirs"],
-                    fr["dv_sidecars"],
-                    fr["dv_rows"],
-                    ",".join(spec.partition_by) or None,
-                    ",".join(spec.cluster_by) or None,
-                    fr["recommend"],
-                )
-            ],
-            "name string, format string, versioned boolean, num_files "
-            "bigint, size_bytes bigint, small_files bigint, write_dirs "
-            "bigint, dv_sidecars bigint, dv_rows bigint, partition_by "
-            "string, cluster_by string, recommend string",
-        )
-
-    m = _DESCRIBE.match(query)
-    if m:
-        name = _resolve(engine, m.group(1))
-        if name is None:
-            return None  # not an engine table — let spark.sql describe it
-        spec = engine.specs[name]
-        marks = {}
-        for c in spec.partition_by:
-            marks[c] = "partition column"
-        for c in spec.bucket_by:
-            marks[c] = marks.get(c, "") or "bucket source column"
-        for c in spec.cluster_by:
-            marks[c] = marks.get(c, "") or "cluster column"
-        for c in spec.keys:
-            marks[c] = (marks.get(c, "") + " key").strip()
-        rows = [
-            (c, dt, marks.get(c))
-            for c, dt in engine.table(name).dtypes
-        ]
-        return engine.spark.createDataFrame(
-            rows, "col_name string, data_type string, comment string"
-        )
-
-    return None
+        ],
+        "name string, format string, versioned boolean, num_files "
+        "bigint, size_bytes bigint, small_files bigint, write_dirs "
+        "bigint, dv_sidecars bigint, dv_rows bigint, partition_by "
+        "string, cluster_by string, recommend string",
+    )

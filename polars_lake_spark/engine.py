@@ -44,7 +44,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from polars_lake_spark import sqltree
-from polars_lake_spark.exprs import referenced_columns
 from polars_lake_spark.layout import (
     BUCKET_COL,
     DEFAULT_BUCKETS,
@@ -484,7 +483,9 @@ class Engine:
             for col, expr in generated.items():
                 # quote-aware: a generated column's NAME inside another
                 # formula's string literal is not a reference
-                if referenced_columns(expr, candidates=list(generated)):
+                if sqltree.referenced_columns(
+                    self.spark, expr, candidates=list(generated)
+                ):
                     raise ValueError(
                         f"create_table {name}: generated column {col!r} "
                         "expression may not reference generated columns"
@@ -894,7 +895,7 @@ class Engine:
                 have = {c.lower() for c in df.columns}
                 missing = sorted(
                     r
-                    for r in referenced_columns(expr)
+                    for r in sqltree.referenced_columns(self.spark, expr)
                     if r.lower() not in have
                 )
                 if strict:
@@ -1683,16 +1684,19 @@ class Engine:
         Spark's own parser reads each statement ONCE
         (:func:`polars_lake_spark.dml.parse_statement`; a time-travel
         splice parses once more) and it routes by its tree: DELETE,
-        UPDATE, INSERT INTO / OVERWRITE and MERGE run the engine's
-        mutation paths, and a single-table SELECT may answer from
+        UPDATE, INSERT INTO / OVERWRITE, MERGE, CREATE TABLE / CTAS
+        (``VERSIONED`` blanked before the parse) and the DROP,
+        TRUNCATE, ANALYZE, SHOW, DESCRIBE and ALTER TABLE forms run the
+        engine's paths, and a single-table SELECT may answer from
         metadata (COUNT(*), partition-grouped or partition-predicate
-        COUNT, MIN/MAX) or through zone-map file skipping.  CTAS /
-        CREATE TABLE, the DDL and the engine-only statements route by
-        prefix regex in :mod:`polars_lake_spark.dml`: Spark has no
-        grammar for the engine-only ones nor for ``CREATE VERSIONED
-        TABLE``, and the DDL regexes have not moved to the tree yet.
-        DML and engine statements return a one-row (operation, table,
-        n_affected) status frame; everything else is vanilla Spark SQL."""
+        COUNT, MIN/MAX) or through zone-map file skipping.  Only the
+        engine-only statements Spark has no grammar for (APPLY
+        CHANGES, VACUUM, OPTIMIZE, COPY INTO, REORG, CONVERT, RESTORE,
+        DESCRIBE HISTORY|DETAIL) route by prefix regex in
+        :mod:`polars_lake_spark.dml`.  DML, DDL and engine statements
+        return a one-row (operation, table, n_affected) status frame
+        (SHOW and DESCRIBE their listing); everything else, and any
+        clause the engine does not read, is vanilla Spark SQL."""
         from polars_lake_spark import dml
 
         query, plan, asof = dml.parse_statement(self, query)
@@ -3038,8 +3042,8 @@ class Engine:
             migration_inputs = set(parts) | set(spec.bucket_by)
             for gcol, gexpr in spec.generated.items():
                 if gcol in parts or gcol in spec.bucket_by:
-                    migration_inputs |= referenced_columns(
-                        gexpr, candidates=old.columns
+                    migration_inputs |= sqltree.referenced_columns(
+                        self.spark, gexpr, candidates=old.columns
                     )
             prune = (
                 not any_delete
@@ -5552,8 +5556,7 @@ class Engine:
                     f"column; cannot {verb} it (redefine the table)"
                 )
             hit = sorted(
-                c for c in cols
-                if c.lower() in {r.lower() for r in referenced_columns(formula)}
+                sqltree.referenced_columns(self.spark, formula, candidates=cols)
             )
             if hit:
                 raise ValueError(
@@ -5567,8 +5570,7 @@ class Engine:
         ):
             for ename, expr in entries.items():
                 hit = sorted(
-                    c for c in cols
-                    if c.lower() in {r.lower() for r in referenced_columns(expr)}
+                    sqltree.referenced_columns(self.spark, expr, candidates=cols)
                 )
                 if hit:
                     raise ValueError(

@@ -42,8 +42,10 @@ the commit publishes the dir) and every deletion-vector sidecar has one
 fixed schema, so no branch infers a schema from footers — only dirs
 without a recorded schema (written before it was recorded, or files
 adopted by ``convert_to_versioned``) still do, one job each.  Partition
-columns still come from the paths.  Commits are atomic via temp-file +
-``os.rename``.
+columns still come from the paths.  Commits are atomic: the manifest is
+written to a temp file and published with ``os.link`` to its version
+name, which fails if that version exists (a concurrent writer's commit
+is never replaced).
 
 The reference has no versioning at all (its manifest is a single mutable
 spec, ``/root/reference/src/dataset.rs:337-358``); this is the

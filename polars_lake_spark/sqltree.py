@@ -5,6 +5,9 @@ parser and routes from the tree, so every literal value and clause
 boundary is Spark's own reading of the text — escapes, doubled quotes
 and keywords inside literals included.  Trees are py4j handles to
 unresolved Catalyst nodes; this module reads what the router needs.
+The engine's stored formulas (generated columns, CHECK constraints,
+expectations) are read through their expression trees too, so no part
+of the package scans SQL text by hand.
 """
 
 from __future__ import annotations
@@ -15,6 +18,7 @@ from decimal import Decimal
 
 from pyspark import SparkContext
 from pyspark.errors import ParseException
+from pyspark.sql import DataFrame
 
 _EPOCH = datetime.datetime(1970, 1, 1)
 # expression nodes holding a query or a window: the SELECT fast paths
@@ -22,6 +26,12 @@ _EPOCH = datetime.datetime(1970, 1, 1)
 _OPAQUE = frozenset(
     "ScalarSubquery ListQuery Exists LateralSubquery "
     "UnresolvedWindowExpression WindowExpression".split()
+)
+
+
+# name nodes whose parts are a ``multipartIdentifier``
+_MULTIPART = frozenset(
+    "UnresolvedRelation UnresolvedTable UnresolvedTableOrView".split()
 )
 
 
@@ -44,6 +54,15 @@ def parse_expression(spark, text: str):
         return _parser(spark).parseExpression(text)
     except ParseException:
         return None
+
+
+def frame(spark, plan) -> DataFrame:
+    """The DataFrame of an unresolved query plan (a CTAS body, an INSERT
+    or MERGE source), analyzed as ``spark.sql`` analyzes its text — no
+    slice of the text, whose clauses an origin may not span (an
+    ``Aggregate``'s covers only its GROUP BY)."""
+    jds = SparkContext._jvm.org.apache.spark.sql.classic.Dataset
+    return DataFrame(jds.ofRows(spark._jsparkSession, plan), spark)
 
 
 def kind(node) -> str:
@@ -76,10 +95,16 @@ def plans(plan):
 
 
 def name(node) -> str:
-    """Dotted name of an unresolved relation, attribute or function."""
-    if kind(node) == "UnresolvedRelation":
-        return ".".join(seq(node.multipartIdentifier()))
-    return ".".join(seq(node.nameParts()))
+    """Dotted name of an unresolved relation, table, identifier, field,
+    attribute or function."""
+    k = kind(node)
+    if k in _MULTIPART:
+        parts = node.multipartIdentifier()
+    elif k == "UnresolvedFieldName":
+        parts = node.name()
+    else:
+        parts = node.nameParts()
+    return ".".join(seq(parts))
 
 
 def _spans(node, out: list) -> list:
@@ -153,6 +178,37 @@ def text(sql: str, node, subs=()) -> str:
         out += [sql[a:lo], new]
         a = hi + 1
     return "".join(out) + sql[a : b + 1]
+
+
+def referenced_columns(spark, formula: str, candidates=None) -> set[str]:
+    """Columns a stored formula (generated column, CHECK, expectation)
+    references: the leading name part of each column reference in its
+    expression tree, as spelled — literals, function names and keywords
+    never are.  With ``candidates``, only those, matched
+    case-insensitively and returned in the candidates' spelling."""
+    refs = {
+        seq(n.nameParts())[0]
+        for n in walk(_parser(spark).parseExpression(formula))
+        if kind(n) == "UnresolvedAttribute"
+    }
+    if candidates is None:
+        return refs
+    cand = {c.lower(): c for c in candidates}
+    return {cand[r.lower()] for r in refs if r.lower() in cand}
+
+
+def substitute_columns(spark, formula: str, mapping: dict[str, str]) -> str:
+    """``formula`` with each single-part column reference whose
+    lower-cased name is in ``mapping`` replaced by its parenthesised
+    mapped expression, in one pass: a replacement is never rescanned
+    (``SET a = b, b = a`` crossings stay correct)."""
+    root = _parser(spark).parseExpression(formula)
+    subs = [
+        (*span(n), f"({mapping[column(n)]})")
+        for n in walk(root)
+        if column(n) in mapping
+    ]
+    return text(formula, root, subs) if subs else formula
 
 
 def conjuncts(expr) -> list:

@@ -1,6 +1,8 @@
 """SQL DML statements (DELETE / UPDATE / INSERT INTO ... SELECT) routed
 through the engine's mutation paths."""
 
+import os
+
 import pytest
 from pyspark.errors import ParseException
 from pyspark.sql import functions as F
@@ -1324,7 +1326,16 @@ def test_show_create_table_roundtrip(spark, tmp_path):
     assert "'auto_optimize.dv_sidecars'='6'" in stmt
     assert "'auto_optimize.write_dirs'='20'" in stmt
     assert stmt.startswith("CREATE VERSIONED TABLE t1")
-    assert "PARTITIONED BY (p)" in stmt and "CLUSTER BY (price)" in stmt
+    # Spark refuses PARTITIONED BY with CLUSTER BY: the clustering of a
+    # partitioned table rides in TBLPROPERTIES
+    assert "PARTITIONED BY (p)" in stmt and "'cluster_by'='price'" in stmt
+    assert "CLUSTER BY" not in stmt
+    # a hand-typed statement with both clauses gets Spark's own refusal
+    with pytest.raises(ParseException, match="CLUSTER_BY_WITH_PARTITIONED"):
+        eng.sql(
+            "CREATE VERSIONED TABLE t9 (a INT, p INT) PARTITIONED BY (p) "
+            "CLUSTER BY (a)"
+        )
     assert "'deletion_vectors'='true'" in stmt
     assert "'constraint.price_pos'='price >= 0'" in stmt
     # declared order survives the hive read-back (p is NOT last)
@@ -2862,3 +2873,143 @@ def test_sql_merge_pins_only_nondeterministic_source(spark, monkeypatch):
         "ON pt.id = s.id WHEN MATCHED THEN UPDATE SET *"
     )
     assert calls["n"] >= 1, "non-deterministic MERGE source must pin"
+
+
+def _versioned_t(spark, root):
+    """A versioned engine table ``t`` (id, p, v) partitioned by p."""
+    e = Engine(spark, root)
+    e.create_table(
+        "t",
+        spark.createDataFrame(
+            [(1, "a", 1.0), (2, "b", 2.0)], "id bigint, p string, v double"
+        ),
+        partition_by=["p"],
+        keys=["id"],
+        versioned=True,
+    )
+    return e
+
+
+def _cols(e, name):
+    return dict(e.table(name).dtypes)
+
+
+# (id, statement, expected rows, engine state check) — each statement
+# once fell through to spark.sql or the Spark catalog
+MISROUTES = [
+    ("drop_comment", "DROP TABLE t -- cleanup", [("drop_table", "t", 1)],
+     lambda e, root: "t" not in e.specs
+     and not os.path.exists(os.path.join(root, "t"))),
+    ("drop_backticked", "DROP TABLE `t`", [("drop_table", "t", 1)],
+     lambda e, root: "t" not in e.specs
+     and not os.path.exists(os.path.join(root, "t"))),
+    ("create_comment", "CREATE TABLE c (a INT) -- x",
+     [("create_table", "c", 0)],
+     lambda e, root: _cols(e, "c") == {"a": "int"}
+     and os.path.isdir(os.path.join(root, "c"))),
+    ("ctas_cte", "CREATE TABLE c AS WITH s AS (SELECT 1 AS a) SELECT a FROM s",
+     [("create_table_as", "c", 1)],
+     lambda e, root: [tuple(r) for r in e.table("c").collect()] == [(1,)]
+     and os.path.isdir(os.path.join(root, "c"))),
+    ("ctas_parenthesised", "CREATE TABLE c AS (SELECT 1 AS a)",
+     [("create_table_as", "c", 1)],
+     lambda e, root: [tuple(r) for r in e.table("c").collect()] == [(1,)]
+     and os.path.isdir(os.path.join(root, "c"))),
+    ("truncate_comment", "TRUNCATE TABLE t -- x", [("truncate", "t", 2)],
+     lambda e, root: e.table("t").count() == 0
+     and _cols(e, "t") == {"id": "bigint", "v": "double", "p": "string"}),
+    ("show_partitions_comment", "SHOW PARTITIONS t -- x",
+     [("p=a", 1), ("p=b", 1)],
+     lambda e, root: e.table("t").count() == 2),
+    ("analyze_comment", "ANALYZE TABLE t COMPUTE STATISTICS -- x",
+     [("analyze", "t", 2)],
+     lambda e, root: e.specs["t"].stats["rows"] == 2),
+    ("rename_column_comment", "ALTER TABLE t RENAME COLUMN v TO w -- x",
+     [("alter_rename_column", "t", 0)],
+     lambda e, root: _cols(e, "t") == {"id": "bigint", "w": "double",
+                                       "p": "string"}),
+    ("drop_column_comment", "ALTER TABLE t DROP COLUMN v -- x",
+     [("alter_drop_column", "t", 0)],
+     lambda e, root: _cols(e, "t") == {"id": "bigint", "p": "string"}),
+    ("set_tblproperties_comment",
+     "ALTER TABLE t SET TBLPROPERTIES ('auto_optimize.write_dirs'='5') -- x",
+     [("set_tblproperties", "t", 1)],
+     lambda e, root: e.specs["t"].auto_optimize == {"write_dirs": 5}),
+    ("add_constraint_comment",
+     "ALTER TABLE t ADD CONSTRAINT pos CHECK (v >= 0) -- x",
+     [("alter_add_constraint", "t", 0)],
+     lambda e, root: e.specs["t"].constraints == {"pos": "v >= 0"}),
+    ("add_column_backticked", "ALTER TABLE t ADD COLUMN `w` INT",
+     [("alter_add_column", "t", 0)],
+     lambda e, root: _cols(e, "t")["w"] == "int"),
+]
+
+
+@pytest.mark.parametrize(
+    "sql,want,check", [c[1:] for c in MISROUTES], ids=[c[0] for c in MISROUTES]
+)
+def test_ddl_routes_by_plan_node(spark, tmp_path, sql, want, check):
+    """Trailing comments, backticked names and CTE or parenthesised CTAS
+    bodies reach the engine's DDL paths: the status (or SHOW) frame, the
+    engine spec and its files reflect the statement, a fresh engine
+    reads the same table back, and no Spark-catalog table appears."""
+    root = str(tmp_path)
+    e = _versioned_t(spark, root)
+    try:
+        rows = [tuple(r) for r in e.sql(sql).collect()]
+        assert rows == want, sql
+        assert check(e, root), sql
+        for name in e.specs:
+            again = Engine(spark, root)
+            again.load_table(name)
+            assert again.table(name).dtypes == e.table(name).dtypes, name
+    finally:
+        leaked = {
+            t.name for t in spark.catalog.listTables() if not t.isTemporary
+        } & {"t", "c"}
+        for name in leaked:
+            spark.sql(f"DROP TABLE {name}")
+    assert not leaked, sql
+
+
+def test_set_tblproperties_several_pairs(spark, tmp_path):
+    """SET TBLPROPERTIES with several pairs validates every pair before it
+    applies any, then applies them all."""
+    e = _versioned_t(spark, str(tmp_path))
+    st = e.sql(
+        "ALTER TABLE t SET TBLPROPERTIES ('auto_optimize.write_dirs'='5', "
+        "'auto_optimize.dv_sidecars'='3', 'deletion_vectors'='true')"
+    ).head()
+    assert (st["operation"], st["n_affected"]) == ("set_tblproperties", 3)
+    spec = e.specs["t"]
+    assert spec.auto_optimize == {"write_dirs": 5, "dv_sidecars": 3}
+    assert spec.deletion_vectors
+    with pytest.raises(ValueError, match="integer threshold"):
+        e.sql(
+            "ALTER TABLE t SET TBLPROPERTIES ('deletion_vectors'='false', "
+            "'auto_optimize.write_dirs'='soon')"
+        )
+    # the valid pair of the refused statement was not applied
+    assert spec.deletion_vectors
+    assert spec.auto_optimize == {"write_dirs": 5, "dv_sidecars": 3}
+
+
+def test_aggregate_query_sources(spark, tmp_path):
+    """INSERT, MERGE and CTAS run a grouped source query as written: an
+    ``Aggregate`` node's origin spans only its GROUP BY clause, so the
+    source is run from its plan, not from a slice of the text."""
+    e = _versioned_t(spark, str(tmp_path))
+    st = e.sql("INSERT INTO t SELECT id + 10, p, sum(v) FROM t GROUP BY id, p")
+    assert tuple(st.head()) == ("insert", "t", 2)
+    st = e.sql(
+        "MERGE INTO t USING (SELECT id - 10 AS id, p, max(v) + 1 AS v FROM t "
+        "WHERE id > 10 GROUP BY id, p) AS s ON t.id = s.id "
+        "WHEN MATCHED THEN UPDATE SET *"
+    )
+    assert tuple(st.head()) == ("merge", "t", 2)
+    st = e.sql("CREATE TABLE agg AS SELECT p, count(*) AS n FROM t GROUP BY p")
+    assert tuple(st.head()) == ("create_table_as", "agg", 2)
+    assert sorted(map(tuple, e.table("t").select("id", "p", "v").collect())) == [
+        (1, "a", 2.0), (2, "b", 3.0), (11, "a", 1.0), (12, "b", 2.0)
+    ]
+    assert sorted(map(tuple, e.table("agg").collect())) == [("a", 2), ("b", 2)]

@@ -192,11 +192,16 @@ def test_rename_rolls_back_half_renamed_family(spark, tmp_path, monkeypatch):
     assert e.table("fam_quarantine").count() == 1
 
 
-def test_exprs_lexer():
-    from polars_lake_spark.exprs import (
-        referenced_columns,
-        substitute_columns,
-    )
+def test_formula_columns(spark):
+    """Formula references come from the expression tree: literals,
+    function names and keywords are not columns."""
+    from polars_lake_spark import sqltree
+
+    def referenced_columns(f, candidates=None):
+        return sqltree.referenced_columns(spark, f, candidates)
+
+    def substitute_columns(f, mapping):
+        return sqltree.substitute_columns(spark, f, mapping)
 
     f = "date_format(d, 'yyyy-MM')"
     assert referenced_columns(f) == {"d"}
@@ -219,19 +224,18 @@ def test_exprs_lexer():
     )
 
 
-def test_keyword_named_set_column_refuses_ambiguous_substitution(spark, tmp_path):
-    """r14 review #3: a SET column named like a SQL keyword ('end')
-    appearing inside a formula's CASE...END is lexically ambiguous —
-    substitution must raise, never corrupt the formula or silently
-    recompute over stale values."""
-    import pytest
+def test_keyword_named_set_column_substitutes_by_tree(spark):
+    """A SET column named like a SQL keyword ('end') is a column only
+    where the expression tree says so: CASE...END's keyword stays, a
+    backticked `end` reference is substituted."""
+    from polars_lake_spark.sqltree import substitute_columns
 
-    from polars_lake_spark.exprs import substitute_columns
-
-    with pytest.raises(ValueError, match="keyword"):
-        substitute_columns(
-            "CASE WHEN a > 1 THEN 2 ELSE 3 END", {"end": "(5)"}
-        )
-    # a non-keyword mapping over the same expression is untouched
-    out = substitute_columns("CASE WHEN a > 1 THEN 2 ELSE 3 END", {"a": "9"})
+    case = "CASE WHEN a > 1 THEN 2 ELSE 3 END"
+    assert substitute_columns(spark, case, {"end": "5"}) == case
+    assert (
+        substitute_columns(spark, "CASE WHEN `end` > 1 THEN 2 END", {"end": "5"})
+        == "CASE WHEN (5) > 1 THEN 2 END"
+    )
+    # a non-keyword mapping over the same expression is substituted
+    out = substitute_columns(spark, case, {"a": "9"})
     assert out == "CASE WHEN (9) > 1 THEN 2 ELSE 3 END"

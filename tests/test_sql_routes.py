@@ -204,3 +204,81 @@ def test_text_slices_reparse_identically(spark, expr):
     for node in nodes:
         back = sqltree.parse_expression(spark, sqltree.text(sql, node))
         assert back.toString() == node.toString(), expr
+
+
+# DDL routes by plan node: (id, statement over a fresh versioned table
+# {t} (id, p, v) partitioned by p, with {u} a name no table has, and the
+# route: the status frame's operation, or the columns of an engine SHOW /
+# DESCRIBE frame — DESCRIBE's with the key flag of its first column, as
+# Spark's own DESCRIBE has the same columns).  Each runs as written, with
+# its names backticked, and with a trailing comment.
+DDL = [
+    ("create_table", "CREATE TABLE {u} (a INT)", "create_table"),
+    ("create_versioned_table", "CREATE VERSIONED TABLE {u} (a INT)",
+     "create_table"),
+    ("ctas", "CREATE TABLE {u} AS SELECT id FROM {t}", "create_table_as"),
+    ("replace_table_as",
+     "CREATE OR REPLACE VERSIONED TABLE {t} PARTITIONED BY (p) AS "
+     "SELECT * FROM {t}", "replace_table_as"),
+    ("drop_table", "DROP TABLE {t}", "drop_table"),
+    ("truncate_table", "TRUNCATE TABLE {t}", "truncate"),
+    ("analyze_table", "ANALYZE TABLE {t} COMPUTE STATISTICS", "analyze"),
+    ("analyze_column",
+     "ANALYZE TABLE {t} COMPUTE STATISTICS FOR COLUMNS id", "analyze"),
+    ("show_partitions", "SHOW PARTITIONS {t}", "partition,rows"),
+    ("show_create_table", "SHOW CREATE TABLE {t}", "createtab_stmt"),
+    ("show_tables", "SHOW TABLES",
+     "tableName,format,versioned,partitionedBy,isTemporary"),
+    ("describe", "DESCRIBE {t}", "col_name,data_type,comment [key]"),
+    ("alter_cluster_by", "ALTER TABLE {t} CLUSTER BY (id)",
+     "alter_cluster_by"),
+    ("set_tblproperties",
+     "ALTER TABLE {t} SET TBLPROPERTIES ('deletion_vectors'='true')",
+     "set_tblproperties"),
+    ("add_constraint", "ALTER TABLE {t} ADD CONSTRAINT pos CHECK (v >= 0)",
+     "alter_add_constraint"),
+    ("drop_constraint", "ALTER TABLE {t} DROP CONSTRAINT IF EXISTS pos",
+     "alter_drop_constraint"),
+    ("add_column", "ALTER TABLE {t} ADD COLUMN w INT", "alter_add_column"),
+    ("drop_column", "ALTER TABLE {t} DROP COLUMN v", "alter_drop_column"),
+    ("alter_column_type", "ALTER TABLE {t} ALTER COLUMN v TYPE DOUBLE",
+     "alter_column_type"),
+    ("rename_column", "ALTER TABLE {t} RENAME COLUMN v TO w",
+     "alter_rename_column"),
+    ("rename_table", "ALTER TABLE {t} RENAME TO {u}", "rename_table"),
+]
+DDL_CASES = [
+    case
+    for i, sql, route in DDL
+    for case in (
+        (i, sql, False, route),
+        *([(i + "_backticked", sql, True, route)] if "{t}" in sql else []),
+        (i + "_commented", sql + " -- a trailing note", False, route),
+    )
+]
+
+
+def _ddl_route(df) -> str:
+    row = df.head()
+    if "operation" in df.columns:
+        return row["operation"]
+    flag = f" [{row['comment']}]" if "comment" in df.columns else ""
+    return ",".join(df.columns) + flag
+
+
+@pytest.mark.parametrize(
+    "sql,quote,route",
+    [c[1:] for c in DDL_CASES],
+    ids=[c[0] for c in DDL_CASES],
+)
+def test_ddl_route(eng, request, sql, quote, route):
+    t = "d_" + request.node.callspec.id
+    eng.create_table(
+        t, eng.table("rt").filter("id < 4").select("id", "p", "v"),
+        partition_by=["p"], keys=["id"], versioned=True,
+    )
+    q = "`{}`" if quote else "{}"
+    got = _ddl_route(
+        eng.sql(sql.format(t=q.format(t), u=q.format(t + "_u")))
+    )
+    assert got == route, sql
